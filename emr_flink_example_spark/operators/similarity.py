@@ -1135,7 +1135,11 @@ def _cents_tables(cents_cv: list[list[float]]):
     """(CV, cvn) numpy tables for the in-kernel coarse assignment: cvn is
     the SAME sequential fold + sqrt as `_centroids_df`'s SQL (acc starts
     0.0 and adds cv_i*cv_i in element order), computed per centroid in
-    plain python so every double matches the JVM column bit-for-bit."""
+    plain python so every double matches the JVM column bit-for-bit.
+
+    Raises ValueError on an all-zero centroid: its cosine is 0/0 = NaN,
+    which the SQL fold ranks above every value and `_assign_ids` below,
+    so the two engines would silently disagree on every row."""
     import math
 
     import numpy as np
@@ -1147,6 +1151,12 @@ def _cents_tables(cents_cv: list[list[float]]):
         for x in cv:
             acc = acc + x * x
         cvn.append(math.sqrt(acc))
+    zero = [i for i, n in enumerate(cvn) if n == 0.0]
+    if zero:
+        raise ValueError(
+            f"degenerate coarse codebook: centroids {zero} have zero norm, "
+            "so their cosine to every row is undefined"
+        )
     return CV, np.asarray(cvn, dtype=np.float64)
 
 

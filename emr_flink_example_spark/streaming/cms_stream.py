@@ -42,7 +42,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.hashing import portable_hash
 from ..operators.textstats import CMS_D, CMS_TOP, CMS_W
-from .fsio import FSIO, LocalFS, fs_for_path
+from .compaction import BatchDirSink
+from .fsio import FSIO
 
 #: per-batch exact top-M candidate keys kept (recall knob: larger M
 #: catches keys that are heavy overall but diluted within single batches)
@@ -60,7 +61,7 @@ def _cell_keys(key_col: str) -> list[F.Column]:
     ]
 
 
-class StreamingCountMin:
+class StreamingCountMin(BatchDirSink):
     """foreachBatch sink maintaining per-batch CMS cell + candidate
     partitions under two sibling directories."""
 
@@ -71,15 +72,10 @@ class StreamingCountMin:
         compact_every: int = 16,
         fs: FSIO | None = None,
     ) -> None:
+        super().__init__(state_path, compact_every, fs)
         self.cells_path = posixpath.join(state_path, "cells")
         self.cands_path = posixpath.join(state_path, "cands")
         self.key_col = key_col
-        self.compact_every = compact_every
-        #: fsio seam — LocalFS for plain paths, HadoopFS resolved lazily
-        #: for URI-scheme paths (needs the SparkSession's JVM gateway)
-        self.fs = fs if fs is not None else (
-            LocalFS() if "://" not in state_path else None
-        )
 
     # ---------------------------------------------------------- per batch
 
@@ -102,15 +98,10 @@ class StreamingCountMin:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if self.fs is None:
-            self.fs = fs_for_path(spark, self.cells_path)
-        self._batch_cells(batch_df).coalesce(1).write.mode("overwrite").parquet(
-            posixpath.join(self.cells_path, f"batch_id={batch_id}")
-        )
-        self._batch_cands(batch_df).coalesce(1).write.mode("overwrite").parquet(
-            posixpath.join(self.cands_path, f"batch_id={batch_id}")
-        )
-        if self.compact_every and batch_id > 0 and batch_id % self.compact_every == 0:
+        self._resolve_fs(spark)
+        self._write_batch(self._batch_cells(batch_df), self.cells_path, batch_id)
+        self._write_batch(self._batch_cands(batch_df), self.cands_path, batch_id)
+        if self._compact_due(batch_id):
             self._compact(spark, batch_id)
 
     # ---------------------------------------------------------- compaction
@@ -119,102 +110,16 @@ class StreamingCountMin:
         """Sum-merge every partition OLDER than the current batch into the
         oldest one (cells: exact; candidates: exact union of the kept
         keys — NOT re-pruned, so compaction never loses a key that some
-        batch promoted).
-
-        Replay safety differs from the HLL/dedup compactions because SUM
-        is NOT duplicate-insensitive, so a same-batch_id replay after a
-        mid-compaction crash must neither re-read its own prior output
-        nor recompute from half-deleted sources:
-
-          * the merge read EXCLUDES this run's own ``compact-<id>-*``
-            files (a crashed prior attempt's output is stale state, not
-            a source — folding it in would double-count every cell);
-            older-generation compact files in the target ARE legitimate
-            sources and are included;
-          * publication is a single atomic rename (the merged output is
-            ``coalesce(1)``, so exactly one parquet file) into a
-            deterministic destination name, overwriting any stale
-            same-id output byte-for-byte;
-          * a ``_compact-<id>.committed`` marker is created only AFTER
-            publication and all source deletions happen only AFTER the
-            marker, so a replay either recomputes from fully-intact
-            sources (no marker → nothing was deleted) or, seeing the
-            marker, skips the merge and just finishes the idempotent
-            cleanup (the published sum already covers every superseded
-            file)."""
-        fs = self.fs
-        for path, keycols in (
-            (self.cells_path, ("cell",)),
-            (self.cands_path, ("k",)),
-        ):
-            old = sorted(
-                (int(d.split("=", 1)[1]), fs.join(path, d))
-                for d in fs.list_dirs(path)
-                if d.startswith("batch_id=")
-                and int(d.split("=", 1)[1]) < current_batch_id
+        batch promoted). SUM is not duplicate-insensitive: the marker
+        protocol of `compact_generation` is what keeps a same-batch_id
+        replay after a mid-compaction crash from double-counting."""
+        for path, key in ((self.cells_path, "cell"), (self.cands_path, "k")):
+            self._fold_older(
+                spark,
+                path,
+                current_batch_id,
+                lambda df, key=key: df.groupBy(key).agg(F.sum("cnt").alias("cnt")),
             )
-            if not old:
-                continue
-            target_id, target_dir = old[0]
-            own_prefix = f"compact-{current_batch_id}-"
-            marker = fs.join(
-                target_dir, f"_compact-{current_batch_id}.committed"
-            )
-            if fs.exists(marker):
-                self._finish_cleanup(old, target_dir, own_prefix, marker)
-                continue
-            if len(old) <= 1:
-                continue
-            src_files = [
-                fs.join(p, f)
-                for _, p in old
-                for f in fs.list_files(p)
-                if f.endswith(".parquet")
-                and not f.startswith(".")
-                and not f.startswith(own_prefix)
-            ]
-            merged = (
-                spark.read.option("basePath", path)
-                .parquet(*src_files)
-                .drop("batch_id")
-                .groupBy(*keycols)
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            tmp = fs.join(path, f".compact-{current_batch_id}")
-            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-            parts = [
-                f
-                for f in fs.list_files(tmp)
-                if f.endswith(".parquet") and not f.startswith(".")
-            ]
-            for i, fname in enumerate(parts):
-                fs.rename_overwrite(
-                    fs.join(tmp, fname),
-                    fs.join(target_dir, f"{own_prefix}{i:05d}.parquet"),
-                )
-            fs.rmtree(tmp)
-            fs.write_text_atomic(marker, "committed\n")
-            self._finish_cleanup(old, target_dir, own_prefix, marker)
-
-    def _finish_cleanup(
-        self, old: list[tuple[int, str]], target_dir: str, own_prefix: str, marker: str
-    ) -> None:
-        """Idempotent post-publication sweep: retire every source the
-        published compact generation already covers (older batch dirs,
-        superseded files in the target, stale older markers), then the
-        marker itself. Safe to re-run after a crash at any point."""
-        fs = self.fs
-        marker_name = fs.basename(marker)
-        for _, p in old[1:]:
-            fs.rmtree(p)
-        for f in fs.list_files(target_dir):
-            if f.startswith("."):
-                continue
-            if f.startswith(own_prefix) or f == marker_name:
-                continue
-            fs.remove(fs.join(target_dir, f))
-        if fs.exists(marker):
-            fs.remove(marker)
 
     # ---------------------------------------------------------- read side
 

@@ -26,8 +26,6 @@ part plain Spark cannot express without this component.
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -39,10 +37,11 @@ from ..operators.dedup import (
     _band_buckets,
     minhash_signatures_for,
 )
-from .fsio import FSIO, LocalFS, fs_for_path
+from .compaction import BatchDirSink
+from .fsio import FSIO
 
 
-class _IndexedDedupStreamFilter:
+class _IndexedDedupStreamFilter(BatchDirSink):
     """Shared machinery for parquet-index-backed streaming dedup sinks:
     index lifecycle (first-batch detection, fail-on-corrupt, every-N-batches
     compaction) and the idempotent per-batch overwrite protocol. Subclasses
@@ -60,16 +59,9 @@ class _IndexedDedupStreamFilter:
         write_partitions: int = 1,
         fs: FSIO | None = None,
     ) -> None:
+        super().__init__(index_path, compact_every, fs)
         self.out_path = out_path
         self.index_path = index_path
-        #: fsio seam — LocalFS for plain paths, HadoopFS resolved lazily
-        self.fs = fs if fs is not None else (
-            LocalFS() if "://" not in index_path else None
-        )
-        #: every N batches, merge the accumulated one-dir-per-batch index
-        #: partitions into one — unbounded small-file accretion otherwise
-        #: (a 100 TB stream is millions of micro-batches). 0 disables.
-        self.compact_every = compact_every
         #: files per batch_id partition dir (the hive-sink discipline:
         #: exactly N files per touched partition per micro-batch, not
         #: tasks x partitions). 1 is right for minute-scale micro-batches;
@@ -137,8 +129,7 @@ class _IndexedDedupStreamFilter:
         a broken index as empty would admit near-dups — the one failure
         mode this component exists to prevent. (The fsio seam answers the
         listing on local disk or via the Hadoop FileSystem API alike.)"""
-        if self.fs is None:
-            self.fs = fs_for_path(spark, self.index_path)
+        self._resolve_fs(spark)
         if not self.fs.is_dir(self.index_path):
             return None
         has_data = any(
@@ -175,79 +166,25 @@ class _IndexedDedupStreamFilter:
                 surviving_feats = feats.join(dups, self.ID_COL, "left_anti")
             else:
                 survivors, surviving_feats = batch_df, feats
-            survivors.coalesce(self.write_partitions).write.mode("overwrite").parquet(
-                posixpath.join(self.out_path, f"batch_id={batch_id}")
+            self._write_batch(
+                survivors, self.out_path, batch_id, self.write_partitions
             )
-            surviving_feats.coalesce(self.write_partitions).write.mode(
-                "overwrite"
-            ).parquet(posixpath.join(self.index_path, f"batch_id={batch_id}"))
+            self._write_batch(
+                surviving_feats, self.index_path, batch_id, self.write_partitions
+            )
         finally:
             for df in pinned:
                 df.unpersist()
-        if self.compact_every and batch_id > 0 and batch_id % self.compact_every == 0:
+        if self._compact_due(batch_id):
             self._compact_index(spark, batch_id)
 
     def _compact_index(self, spark, current_batch_id: int) -> None:
         """Merge every index partition OLDER than the current batch into the
-        oldest one (fewer dirs/files, same rows).
-
-        Replay-safe: streaming replays only the LATEST batch, so rewriting
-        strictly-older partitions can never collide with a replay, and the
-        merged rows keep a batch_id (the oldest) that no replay will ever
-        exclude. Crash-safe ordering (the hll_stream protocol): the merged
-        files are PUBLISHED into the oldest partition via atomic per-file
-        renames BEFORE any source file or partition is deleted — a crash
-        at any intermediate point leaves only duplicate index rows, which
-        the probe's distinct() makes harmless, and the next compaction
-        sweeps them up. (The previous rmtree(target)-then-rename(tmp)
-        ordering had a window where the oldest partition existed only as
-        an invisible dot-dir: a crash there LOST its rows and the index
-        would silently readmit near-dups.) A same-batch_id replay after a
-        crash is also safe: files named like this run's own rename
-        destinations are excluded from the superseded list (they are this
-        run's targets — deleting them in cleanup would empty the
-        partition), while still being read into the merge."""
-        fs = self.fs
-        old = sorted(
-            (
-                int(d.split("=", 1)[1]),
-                fs.join(self.index_path, d),
-            )
-            for d in fs.list_dirs(self.index_path)
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) < current_batch_id
-        )
-        if len(old) <= 1:
-            return
-        # Merged rows all take the oldest dir's batch_id (partition-derived
-        # on read). Per-row original ids are disposable: replay exclusion
-        # only ever targets the CURRENT batch, and merged rows are strictly
-        # older by construction.
-        merged = (
-            spark.read.option("basePath", self.index_path)
-            .parquet(*[p for _, p in old])
-            .drop("batch_id")
-        )
-        target_id, target_dir = old[0]
-        tmp = fs.join(self.index_path, f".compact-{current_batch_id}")
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        own_prefix = f"compact-{current_batch_id}-"
-        superseded = [
-            fs.join(target_dir, f)
-            for f in fs.list_files(target_dir)
-            if not f.startswith(".") and not f.startswith(own_prefix)
-        ]
-        for i, fname in enumerate(fs.list_files(tmp)):
-            if fname.endswith(".parquet"):
-                fs.rename_overwrite(
-                    fs.join(tmp, fname),
-                    fs.join(target_dir, f"{own_prefix}{i:05d}.parquet"),
-                )
-        fs.rmtree(tmp)
-        for _, p in old[1:]:
-            fs.rmtree(p)
-        for f in superseded:
-            if fs.exists(f):
-                fs.remove(f)
+        oldest one (fewer dirs/files, same rows) via `compact_generation`.
+        Merged rows all take the oldest dir's batch_id (partition-derived
+        on read); replay exclusion only ever targets the CURRENT batch,
+        and merged rows are strictly older by construction."""
+        self._fold_older(spark, self.index_path, current_batch_id, lambda df: df)
 
 
 class NearDupStreamFilter(_IndexedDedupStreamFilter):

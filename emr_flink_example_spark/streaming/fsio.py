@@ -1,8 +1,9 @@
 """Filesystem seam for the staged-publish / commit-marker protocols.
 
-The hive sink's staged append (`partition_commit.PartitionCommitter`),
-the partition compactor (`compaction.py`), and the sketch-state
-compactors all follow the same driver-side protocol: list data files,
+The hive sink's staged append (`partition_commit.PartitionCommitter`)
+and the one compaction protocol (`compaction.compact_generation`, used
+for Hive partitions, the HLL/count-min/ES-sample state and the dedup
+band index) follow the same driver-side pattern: list data files,
 publish deterministically-named files via rename, write small text
 markers/ledgers atomically, sweep superseded files. On a laptop that is
 `os`/`shutil`; where the 100 TB mandate actually lives (S3/HDFS) it has

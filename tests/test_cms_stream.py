@@ -8,6 +8,7 @@ import hashlib
 from collections import Counter
 
 from emr_flink_example_spark.operators.textstats import CMS_D, CMS_TOP, CMS_W
+from emr_flink_example_spark.streaming import compaction
 from emr_flink_example_spark.streaming.cms_stream import (
     CAND_M,
     StreamingCountMin,
@@ -139,37 +140,37 @@ def _expected_estimates(union):
     return cells
 
 
-def _crash_compact(sink, spark, batch_id, crash_at):
-    """Run _compact but crash at a chosen point: 'pre_marker' crashes
-    after publication renames but before the commit marker; 'pre_cleanup'
-    crashes after the marker but before any source deletion."""
+def _crash_compact(fs, compact, crash_at):
+    """Run `compact()` but crash at a chosen point of the shared protocol
+    (`compaction.compact_generation`): 'pre_marker' crashes after the
+    publication renames but before the commit marker; 'pre_cleanup'
+    crashes after the marker but before any source deletion. Returns
+    whether the crash fired."""
 
     class Boom(RuntimeError):
         pass
 
-    # the marker now publishes through the fsio seam (write_text_atomic on
-    # the sink's fs); crash by shadowing the seam method / the cleanup hook
-    fs_cls = type(sink.fs)
-    orig_cleanup = StreamingCountMin.__dict__["_finish_cleanup"]
+    def boom(*_args):
+        raise Boom()
+
+    # the marker publishes through the fsio seam (write_text_atomic on the
+    # caller's fs); crash by shadowing the seam method / the shared sweep
+    fs_cls = type(fs)
+    orig_sweep = compaction._sweep
     try:
         if crash_at == "pre_marker":
-            fs_cls.write_text_atomic = (
-                lambda self, path, text: (_ for _ in ()).throw(Boom())
-            )
+            fs_cls.write_text_atomic = boom
         else:
-            StreamingCountMin._finish_cleanup = (
-                lambda self, old, target_dir, own_prefix, marker: (
-                    _ for _ in ()
-                ).throw(Boom())
-            )
+            compaction._sweep = boom
         try:
-            sink._compact(spark, batch_id)
+            compact()
         except Boom:
-            pass
+            return True
+        return False
     finally:
         if "write_text_atomic" in fs_cls.__dict__:
             del fs_cls.write_text_atomic  # base FSIO impl shows through again
-        StreamingCountMin._finish_cleanup = orig_cleanup
+        compaction._sweep = orig_sweep
 
 
 def test_replayed_compaction_does_not_double_count(spark, tmp_path):
@@ -185,9 +186,9 @@ def test_replayed_compaction_does_not_double_count(spark, tmp_path):
         for i, b in enumerate((b0, b1, b2)):
             sink(_batch(spark, b), i)
         cells = _ref_cells(union)
-        # crash mid-compaction: stale compact-3-* files now sit next to
+        # crash mid-compaction: stale compacted-3-* files now sit next to
         # the still-present originals
-        _crash_compact(sink, spark, 3, crash_at)
+        _crash_compact(sink.fs, lambda: sink._compact(spark, 3), crash_at)
         # checkpoint replay re-triggers the same compaction to completion
         sink._compact(spark, 3)
         got = {(r.cell, r.cnt) for r in sink.cells(spark).collect()}

@@ -197,7 +197,7 @@ def test_index_compaction_crash_windows_never_lose_rows(spark, tmp_path):
         if f.endswith(".parquet"):
             shutil.copy(
                 tmp_path / "m" / f,
-                os.path.join(idx, "batch_id=0", f"compact-4-{i:05d}.parquet"),
+                os.path.join(idx, "batch_id=0", f"compacted-4-{i:05d}.parquet"),
             )
             i += 1
     # all partitions + duplicates present: a probe still drops the near-dup

@@ -95,7 +95,7 @@ def test_compaction_crash_and_same_batch_replay_safe(spark, tmp_path):
         if f.endswith(".parquet"):
             shutil.copy(
                 tmp_path / "m" / f,
-                cands / "batch_id=0" / f"compact-2-{i:05d}.parquet",
+                cands / "batch_id=0" / f"compacted-2-{i:05d}.parquet",
             )
             i += 1
     # duplicates-only window: the sample is already exact

@@ -109,7 +109,7 @@ def test_compaction_crash_window_is_duplicate_only(spark, tmp_path):
         if f.endswith(".parquet"):
             shutil.copy(
                 tmp_path / "m" / f,
-                regs_path / "batch_id=0" / f"compact-99-{i:05d}.parquet",
+                regs_path / "batch_id=0" / f"compacted-99-{i:05d}.parquet",
             )
             i += 1
     # every partition still present + duplicates in batch 0: estimate exact
@@ -126,7 +126,7 @@ def test_compaction_crash_window_is_duplicate_only(spark, tmp_path):
 def test_compaction_replay_same_batch_id_after_crash(spark, tmp_path):
     """Checkpoint replay of the SAME compaction batch after a crash must
     not lose registers. Crash state simulated: the first run published its
-    merged file (`compact-2-00000.parquet` — the run's OWN deterministic
+    merged file (`compacted-2-00000.parquet` — the run's OWN deterministic
     rename destination name) into the target partition, then died before
     deleting old[1:]. The replayed run re-merges, renames onto the same
     path, and must NOT list that path as superseded — doing so would
@@ -148,7 +148,7 @@ def test_compaction_replay_same_batch_id_after_crash(spark, tmp_path):
         if f.endswith(".parquet"):
             shutil.copy(
                 tmp_path / "m" / f,
-                regs_path / "batch_id=0" / f"compact-2-{i:05d}.parquet",
+                regs_path / "batch_id=0" / f"compacted-2-{i:05d}.parquet",
             )
             i += 1
     assert sink.estimate(spark) == _ref_estimate(range(600))

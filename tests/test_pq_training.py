@@ -12,6 +12,7 @@ trainer itself.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from emr_flink_example_spark.io import load
@@ -196,3 +197,11 @@ def test_assign_kernel_matches_ivf_assign_sql(spark):
         .collect()
     }
     assert len(arrow) > 0 and arrow == rel
+
+
+def test_cents_tables_rejects_zero_norm_centroid():
+    """A degenerate codebook with an all-zero centroid fails loudly: its
+    cosine is NaN, which the SQL fold and `_assign_ids` rank differently."""
+    S._cents_tables([[1.0, 0.0], [0.5, -0.5]])  # nonzero norms: accepted
+    with pytest.raises(ValueError, match="centroids \\[1\\]"):
+        S._cents_tables([[1.0, 0.0], [0.0, 0.0], [0.5, -0.5]])
