@@ -1540,16 +1540,10 @@ def q_dedup_embedding_cosine(
     stays constant as the corpus grows (tests/test_lsh_fanout.py pins the
     refinement property). Recall is tunable via multi-probe (OR of
     Hamming-1 buckets) without changing the shape."""
-    from .similarity import N_PLANES, _norm, _with_bucket
+    from .similarity import N_PLANES, _nonzero_vectors
 
-    emb = _with_bucket(
-        load(spark, sf, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        ),
-        n_planes=N_PLANES if n_planes is None else n_planes,
-    ).withColumn("nrm", _norm("e")).where(
-        F.expr("exists(e, x -> x <> 0.0d)")  # all-zero vector: cosine undefined, exclude
-        # (exists short-circuits; `nrm > 0` would re-run the 64-term norm fold per row)
+    emb = _nonzero_vectors(
+        load(spark, sf, "embeddings"), n_planes=N_PLANES if n_planes is None else n_planes
     )
     # In-bucket pairs by grouping, not a self-join: the join form scans and
     # re-computes bucket+norm for both sides (no ReusedExchange across join
@@ -1678,16 +1672,12 @@ def q_dedup_semantic_clusters(
         DIM,
         N_CENTROIDS,
         _assign_only_kernel,
+        _nonzero_vectors,
         _norm,
         trained_codebook,
     )
 
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        # all-zero vector: cosine undefined, exclude (see similarity.py)
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
+    emb = _nonzero_vectors(load(spark, sf, "embeddings"), norm=False)
     # r15: assignment (and the nrm the in-cluster cosines divide by) runs
     # in ONE Arrow pass (`_assign_only_kernel`) instead of the interpreted
     # `_IVF_ASSIGN_SQL` + `_norm` CodegenFallback folds per row — bit-equal
@@ -2785,17 +2775,9 @@ def q_embedding_decontamination(spark: SparkSession, sf: str) -> DataFrame:
     probe rollup; clean probes surface with zeros via the left join. The
     zero-vector exclusion is mirrored IN THE ORACLE (not assumed from the
     fixture — ADVICE r6)."""
-    from .similarity import _norm, _with_bucket
+    from .similarity import N_PLANES, _nonzero_vectors
 
-    emb = (
-        _with_bucket(
-            load(spark, sf, "embeddings").select(
-                "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-            )
-        )
-        .withColumn("nrm", _norm("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))  # cosine undefined on 0-vectors
-    )
+    emb = _nonzero_vectors(load(spark, sf, "embeddings"), "label", n_planes=N_PLANES)
     probe = emb.where(F.col("label") == EMB_DECON_LABEL).select(
         F.col("vec_id").alias("probe_vec_id"),
         "bucket",

@@ -1,19 +1,29 @@
 """Embedding similarity search over `embeddings` (SURVEY.md §2 Part C).
 
-Two tiers:
-  * brute-force cosine top-k — the exactness baseline: broadcast the (small)
-    query set against the candidate corpus, dot products via JVM-side
-    `zip_with`/`aggregate` higher-order functions (no Python in the hot
-    path), per-query top-k via rank-over-window;
-  * random-hyperplane LSH — the 100 TB path: each vector gets a compact
-    bucket id (sign bits of K fixed hyperplane projections); search touches
-    only same-bucket candidates, so cost ~ O(n / 2^K) per query after one
-    shuffle on bucket id. Hyperplanes are fixed ±1 vectors (seeded), which
-    keeps them exactly reproducible in the DuckDB oracle.
+Every tier — brute force, LSH (single, multi-probe, multi-table), IVF,
+PQ-ADC (+ exact rerank), IVF-PQ (raw and residual), binary sign codes
+(full scan, banded, multi-probe), MMR and hard-negative mining — is a
+composition of the same stages, each written once below:
 
-At real scale the query side is broadcast and the corpus is bucketed once and
-reused (write bucket id as a partition column); multi-probe = OR of
-Hamming-1-neighbor buckets.
+  * prep — `_nonzero_vectors`: (vec_id, e[, bucket][, nrm]) with all-zero
+    vectors dropped (cosine undefined);
+  * route — sign-bit buckets (`_with_bucket`; the hyperplanes are fixed,
+    seeded ±1 vectors, so the oracle reproduces them exactly), IVF probe
+    lists (`_probe_lists`), or the sign-code band index (`_band_keys`);
+  * score — exact cosine (`_cosine`, a JVM-side sequential fold, no Python
+    in the hot path), ADC lookup tables (`_with_lut` / `_adc_scored_pairs`
+    over codes from the Arrow encode kernels, whose numpy distances all
+    come from `_d2_sub`), or Hamming distance over packed sign words;
+  * shortlist + rerank — `_l2_rerank` (ADC -> exact L2) and
+    `_hamming_rerank` (Hamming -> exact cosine);
+  * top-k — `_top_k`, the one per-query cut. Ties break on ascending
+    neighbor_id, the same `ORDER BY metric, neighbor_id ASC` rule every
+    DuckDB oracle here uses (`_cosine_ranked_duck`, `_l2_rerank_duck`).
+
+The query side is broadcast; the corpus is touched by one cross or equi
+join per tier. At real scale the corpus is bucketed / assigned / encoded
+once and reused (write bucket or centroid id as a partition column, so a
+probe is partition pruning, not a shuffle).
 """
 
 from __future__ import annotations
@@ -21,6 +31,7 @@ from __future__ import annotations
 import math
 import random
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -49,8 +60,6 @@ def n_planes_for(n_rows: int, target_bucket_rows: int = 100_000) -> int:
     n=1e11, target=1e5 -> 20 planes -> ~1M buckets — full-cluster
     parallelism, bounded per-task work. Floors at the oracle-stable default
     so tiny inputs keep the reference bucketing."""
-    import math
-
     if n_rows <= target_bucket_rows:
         return N_PLANES
     return max(N_PLANES, math.ceil(math.log2(n_rows / target_bucket_rows)))
@@ -81,12 +90,118 @@ def _norm(e: str) -> F.Column:
     return F.sqrt(_dot(e, e))
 
 
-def _plane_lit(j: int) -> str:
-    return "array(" + ", ".join(f"{v}D" for v in PLANES[j]) + ")"
+def _cosine(a: str = "qe", b: str = "ce", an: str = "qn", bn: str = "cn") -> F.Column:
+    """Exact cosine of array columns `a`, `b` over their precomputed norms."""
+    return _dot(a, b) / (F.col(an) * F.col(bn))
 
 
-def _plane_duck(j: int) -> str:
-    return "[" + ", ".join(str(v) for v in PLANES[j]) + "]::DOUBLE[]"
+def _vec_lit(v: list[float]) -> str:
+    """A fixed vector as a Spark SQL array<double> literal."""
+    return "array(" + ", ".join(f"{x}D" for x in v) + ")"
+
+
+def _duck_lit(v: list[float]) -> str:
+    """The same vector as a DuckDB DOUBLE[] literal."""
+    return "[" + ", ".join(str(x) for x in v) + "]::DOUBLE[]"
+
+
+def _vectors(spark: SparkSession, sf: str) -> DataFrame:
+    """(vec_id, e): every row of `embeddings`, e as array<double>."""
+    return load(spark, sf, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+
+
+def _nonzero_vectors(
+    df: DataFrame,
+    *extra: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    norm: bool = True,
+    n_planes: int | None = None,
+    names: tuple[str, str, str] = ("vec_id", "e", "nrm"),
+) -> DataFrame:
+    """(id, *extra, vector[, bucket][, norm]) under `names` for the rows of
+    `df` whose vector has a nonzero component — the prep stage of every
+    cosine tier. All-zero vectors are dropped (cosine undefined);
+    `exists()` short-circuits, where `nrm > 0` would re-run the 64-term
+    norm fold per row. `n_planes` adds the sign-bit LSH bucket
+    (`_with_bucket`, which reads the vector as `e`)."""
+    i, e, n = names
+    out = df.select(
+        F.col(id_col) if id_col == i else F.col(id_col).alias(i),
+        *extra,
+        F.col(vec_col).cast("array<double>").alias(e),
+    )
+    if n_planes is not None:
+        out = _with_bucket(out, n_planes)
+    if norm:
+        out = out.withColumn(n, _norm(e))
+    return out.where(F.expr(f"exists({e}, x -> x <> 0.0d)"))
+
+
+def _top_k(
+    df: DataFrame,
+    metric: str,
+    k: int,
+    *,
+    desc: bool = True,
+    rank: str = "nn_rank",
+    part: tuple[str, ...] = ("query_id",),
+    tie: str = "neighbor_id",
+) -> DataFrame:
+    """Each `part` group's first `k` rows by `metric` as a `rank` column.
+    Ties break on ascending `tie` — the total order every oracle here
+    mirrors with `ORDER BY metric, neighbor_id ASC`, which makes the cut
+    engine-exact. Plans as WindowGroupLimit (top-k before the shuffle)."""
+    order = F.col(metric).desc() if desc else F.col(metric).asc()
+    w = Window.partitionBy(*part).orderBy(order, F.col(tie).asc())
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _cosine_out(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, nn_rank, cosine) — the per-query cosine top-k
+    every exact-cosine tier returns."""
+    return _top_k(scored, "cosine", k).select(
+        "query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine")
+    )
+
+
+#: query side (e, nrm) -> (qe, qn), corpus side -> (ce, cn)
+_QC = {"e": ("qe", "ce"), "nrm": ("qn", "cn")}
+
+
+def _renamed(df: DataFrame, id_alias: str, cols: dict[str, str]) -> DataFrame:
+    """`df` as (id_alias, *renamed cols): vec_id becomes `id_alias` and each
+    {column: new name} entry is renamed."""
+    return df.select(F.col("vec_id").alias(id_alias), *[F.col(s).alias(a) for s, a in cols.items()])
+
+
+def _sides(
+    emb: DataFrame,
+    cols: dict[str, tuple[str, str]] = _QC,
+    ids: tuple[str, str] = ("query_id", "neighbor_id"),
+    n_queries: int = 10,
+) -> tuple[DataFrame, DataFrame]:
+    """The query side (vec_id < n_queries) and the corpus side of one
+    prepared frame: vec_id becomes ids[0] / ids[1], and each `cols` entry
+    {column: (query name, corpus name)} is renamed per side."""
+    q = _renamed(emb.where(F.col("vec_id") < n_queries), ids[0], {s: a for s, (a, _) in cols.items()})
+    return q, _renamed(emb, ids[1], {s: b for s, (_, b) in cols.items()})
+
+
+def _cross(q: DataFrame, c: DataFrame, nbr: str = "neighbor_id") -> DataFrame:
+    """Broadcast query side x corpus, self-matches excluded."""
+    return F.broadcast(q).crossJoin(c).where(F.col("query_id") != F.col(nbr))
+
+
+def _bucket_scored(q: DataFrame, c: DataFrame) -> DataFrame:
+    """Cosine of every same-bucket (qb == cb) pair: the LSH candidate join."""
+    return (
+        F.broadcast(q)
+        .join(c, (F.col("qb") == F.col("cb")) & (F.col("query_id") != F.col("neighbor_id")))
+        .withColumn("cosine", _cosine())
+    )
 
 
 def cosine_topk(
@@ -102,34 +217,12 @@ def cosine_topk(
     ANN tier in this module is measured against. The query side is
     broadcast: correct whenever the query set is the small side (the ANN
     tiers are the path when it is not). Self-matches (same id) are
-    excluded; all-zero vectors are dropped from both sides (cosine
-    undefined — exists() short-circuits, `nrm > 0` would re-run the
-    64-term norm fold per row)."""
-
-    def prep(df: DataFrame, out_id: str, out_e: str, out_n: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(id_col).alias(out_id),
-                F.col(vec_col).cast("array<double>").alias(out_e),
-            )
-            .withColumn(out_n, _norm(out_e))
-            .where(F.expr(f"exists({out_e}, x -> x <> 0.0d)"))
-        )
-
-    q = prep(queries, "query_id", "qe", "qn")
-    c = prep(corpus, "neighbor_id", "ce", "cn")
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
+    excluded; all-zero vectors are dropped from both sides."""
+    q, c = (
+        _nonzero_vectors(df, id_col=id_col, vec_col=vec_col, names=names)
+        for df, names in ((queries, ("query_id", "qe", "qn")), (corpus, ("neighbor_id", "ce", "cn")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_out(_cross(q, c).withColumn("cosine", _cosine()), k)
 
 
 def q_knn_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
@@ -162,26 +255,10 @@ def q_ann_mmr_topk(spark: SparkSession, sf: str) -> DataFrame:
     row carrying a MMR_C-element array — the MMR math never touches the
     corpus again, and the per-query fold work is K * C * K dot products of
     kilobyte arrays."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("nid"), F.col("e").alias("ce"), F.col("nrm").alias("cn")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("qsim").desc(), F.col("nid").asc())
-    shortlist = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("nid"))
-        .withColumn("qsim", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-        .withColumn("sl_rank", F.row_number().over(w))
-        .where(F.col("sl_rank") <= MMR_C)
+    q, c = _sides(_nonzero_vectors(load(spark, sf, "embeddings")), ids=("query_id", "nid"))
+    shortlist = _top_k(
+        _cross(q, c, "nid").withColumn("qsim", _cosine()),
+        "qsim", MMR_C, rank="sl_rank", tie="nid",
     )
     per_q = shortlist.groupBy("query_id").agg(
         F.sort_array(F.collect_list(F.struct("nid", "qsim", "ce", "cn"))).alias("rem")
@@ -234,6 +311,15 @@ def q_ann_mmr_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _sign_bucket(planes: list[list[float]]) -> F.Column:
+    """Bucket id of column `e`: bit j set iff e . planes[j] > 0."""
+    bucket = None
+    for j, plane in enumerate(planes):
+        bit = F.when(_dot("e", _vec_lit(plane)) > 0, F.lit(1 << j)).otherwise(F.lit(0))
+        bucket = bit if bucket is None else bucket + bit
+    return bucket
+
+
 def _with_bucket(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     """Sign-bit bucket id from `n_planes` fixed hyperplanes.
 
@@ -244,14 +330,9 @@ def _with_bucket(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     stream, bucket ids for k planes are the low-k-bit prefix of any larger
     bucketing (candidates only split, never re-mix)."""
     planes = make_planes(n_planes) if n_planes != N_PLANES else PLANES
-    bucket = None
-    for j in range(n_planes):
-        lit = "array(" + ", ".join(f"{v}D" for v in planes[j]) + ")"
-        bit = F.when(_dot("e", lit) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
     # int covers every practical fan-out (n_planes_for caps ~log2(n) < 31);
     # beyond that the id needs bigint, which would also change oracle schemas.
-    return emb.withColumn("bucket", bucket.cast("int" if n_planes <= 31 else "bigint"))
+    return emb.withColumn("bucket", _sign_bucket(planes).cast("int" if n_planes <= 31 else "bigint"))
 
 
 def q_ann_lsh_buckets(spark: SparkSession, sf: str) -> DataFrame:
@@ -283,39 +364,18 @@ def ann_lsh_topk(
     corpus is touched via ONE equi-join on the bucket id; size `n_planes`
     to the corpus with `n_planes_for(n_rows)` (in-bucket work is
     O(sum bucket^2))."""
-
-    def prep(df, out_id, out_e, out_n, out_b):
-        d = _with_bucket(
-            df.select(
-                F.col(id_col).alias(out_id),
-                F.col(vec_col).cast("array<double>").alias("e"),
-            ),
-            n_planes,
+    q, c = (
+        _nonzero_vectors(
+            df, id_col=id_col, vec_col=vec_col, n_planes=n_planes, names=(i, "e", "nrm")
+        ).select(
+            i,
+            F.col("e").alias(s + "e"),
+            F.col("nrm").alias(s + "n"),
+            F.col("bucket").alias(s + "b"),
         )
-        return (
-            d.withColumn("nrm", _norm("e"))
-            .where(F.expr("exists(e, x -> x <> 0.0d)"))
-            .select(
-                out_id,
-                F.col("e").alias(out_e),
-                F.col("nrm").alias(out_n),
-                F.col("bucket").alias(out_b),
-            )
-        )
-
-    q = prep(queries, "query_id", "qe", "qn", "qb")
-    c = prep(corpus, "neighbor_id", "ce", "cn", "cb")
-    scored = (
-        F.broadcast(q)
-        .join(c, (F.col("qb") == F.col("cb")) & (F.col("query_id") != F.col("neighbor_id")))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
+        for df, i, s in ((queries, "query_id", "q"), (corpus, "neighbor_id", "c"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_out(_bucket_scored(q, c), k)
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -333,43 +393,18 @@ def q_ann_lsh_multiprobe_topk(spark: SparkSession, sf: str) -> DataFrame:
     query side by N_PLANES+1; the corpus keeps exactly one bucket id and is
     still touched via equi-join on it — recall rises without re-bucketing
     or corpus blow-up."""
-    emb = _with_bucket(
-        load(spark, sf, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-    ).withColumn("nrm", _norm("e")).where(
-        F.expr("exists(e, x -> x <> 0.0d)")  # all-zero vector: cosine undefined, exclude
-        # (exists short-circuits; `nrm > 0` would re-run the 64-term norm fold per row)
-    )
+    emb = _nonzero_vectors(load(spark, sf, "embeddings"), n_planes=N_PLANES)
     probe_buckets = F.array(
         F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(N_PLANES)]
     )
-    q = (
-        emb.where(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qn"),
-            F.explode(probe_buckets).alias("qb"),
-        )
+    c = _renamed(emb, "neighbor_id", {"e": "ce", "nrm": "cn", "bucket": "cb"})
+    q = emb.where(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("nrm").alias("qn"),
+        F.explode(probe_buckets).alias("qb"),
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-        F.col("bucket").alias("cb"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, (F.col("qb") == F.col("cb")) & (F.col("query_id") != F.col("neighbor_id")))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_out(_bucket_scored(q, c), 3)
 
 
 #: multi-table LSH: L independent tables of K hyperplanes each. Recall
@@ -386,22 +421,6 @@ MT_PLANES = [
 ]
 
 
-def _mt_plane_lit(t: int, j: int) -> str:
-    return "array(" + ", ".join(f"{v}D" for v in MT_PLANES[t][j]) + ")"
-
-
-def _mt_plane_duck(t: int, j: int) -> str:
-    return "[" + ", ".join(str(v) for v in MT_PLANES[t][j]) + "]::DOUBLE[]"
-
-
-def _mt_bucket(t: int) -> F.Column:
-    bucket = None
-    for j in range(PLANES_PER_TABLE):
-        bit = F.when(_dot("e", _mt_plane_lit(t, j)) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("int")
-
-
 def q_ann_lsh_multitable_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Multi-table LSH top-3: candidates are the union of same-bucket
     matches across N_TABLES independent hyperplane tables.
@@ -411,54 +430,29 @@ def q_ann_lsh_multitable_topk(spark: SparkSession, sf: str) -> DataFrame:
     candidate generation is one equi-join on the composite key; pairs found
     by several tables are deduped before the exact cosine rank. Corpus cost
     grows linearly in L while recall amplifies as 1-(1-p^K)^L."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    keyed = emb.select(
+    keyed = _nonzero_vectors(load(spark, sf, "embeddings"), norm=False).select(
         "vec_id",
         "e",
         _norm("e").alias("nrm"),
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(t).alias("tbl"), _mt_bucket(t).alias("bucket"))
-                    for t in range(N_TABLES)
+                    F.struct(F.lit(t).alias("tbl"), _sign_bucket(planes).cast("int").alias("bucket"))
+                    for t, planes in enumerate(MT_PLANES)
                 ]
             )
         ).alias("tb"),
     ).select(
         "vec_id", "e", "nrm", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
-    ).where(
-        F.expr("exists(e, x -> x <> 0.0d)")  # all-zero vector: cosine undefined, exclude
-        # (exists short-circuits; `nrm > 0` would re-run the 64-term norm fold per row)
     )
-    q = keyed.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-        "tbl",
-        "bucket",
-    )
-    c = keyed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-        "tbl",
-        "bucket",
-    )
+    q, c = _sides(keyed, {**_QC, "tbl": ("tbl", "tbl"), "bucket": ("bucket", "bucket")})
     cand = (
         F.broadcast(q)
         .join(c, ["tbl", "bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_out(cand.withColumn("cosine", _cosine()), 3)
 
 
 def q_embedding_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
@@ -477,51 +471,21 @@ def q_embedding_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     candidate generator for any ANN tier here (IVF/LSH shortlists) and the
     window/rank tail is unchanged — mining cost then follows the ANN scan,
     not n_queries x corpus."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", "label", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm("e"))
-        # all-zero vector: cosine undefined, exclude (see q_knn_bruteforce)
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("c_label"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    )
+    emb = _nonzero_vectors(load(spark, sf, "embeddings"), "label")
+    q, c = _sides(emb, {"label": ("q_label", "c_label"), **_QC})
+    scored = _cross(q, c).withColumn("cosine", _cosine())
     w = Window.partitionBy("query_id")
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn(
-            "pos_cosine",
-            F.max(F.when(F.col("q_label") == F.col("c_label"), F.col("cosine"))).over(w),
-        )
-        .where(F.col("q_label") != F.col("c_label"))
-        .withColumn("nn_rank", F.row_number().over(wr))
-        .where(F.col("nn_rank") <= 3)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            F.round("cosine", 4).alias("neg_cosine"),
-            F.round("pos_cosine", 4).alias("pos_cosine"),
-            F.round(F.col("pos_cosine") - F.col("cosine"), 4).alias("margin"),
-        )
+    pos = F.max(F.when(F.col("q_label") == F.col("c_label"), F.col("cosine"))).over(w)
+    return _top_k(
+        scored.withColumn("pos_cosine", pos).where(F.col("q_label") != F.col("c_label")),
+        "cosine", 3,
+    ).select(
+        "query_id",
+        "neighbor_id",
+        "nn_rank",
+        F.round("cosine", 4).alias("neg_cosine"),
+        F.round("pos_cosine", 4).alias("pos_cosine"),
+        F.round(F.col("pos_cosine") - F.col("cosine"), 4).alias("margin"),
     )
 
 
@@ -587,21 +551,8 @@ def ann_ivf_topk(
     `n_centroids` centroids train on a deterministic <=100k-vector hash
     sample. 100 TB posture in `q_ann_ivf_topk`."""
     spark = corpus.sparkSession
-
-    def prep(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("e"),
-            )
-            .withColumn("nrm", _norm("e"))
-            # all-zero vector: cosine undefined, exclude (exists
-            # short-circuits; `nrm > 0` would re-run the norm fold per row)
-            .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        )
-
-    emb = prep(corpus)
-    q = prep(queries)
+    emb = _nonzero_vectors(corpus, id_col=id_col, vec_col=vec_col)
+    q = _nonzero_vectors(queries, id_col=id_col, vec_col=vec_col)
     if codebook is None:
         first = emb.select(F.size("e").alias("d")).first()
         dim = first.d if first else 0
@@ -611,67 +562,40 @@ def ann_ivf_topk(
             else []
         )
     cent = _centroids_df(spark, codebook)
-    cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
-    wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
-    # One-row broadcast side: sort_array orders the struct array by its first
-    # field (centroid_id), making the fold's iteration order deterministic
-    # regardless of how collect_list saw the partitions.
-    cent_arr = cent.agg(
-        F.sort_array(F.collect_list(F.struct("centroid_id", "cv", "cvn"))).alias("cents")
+    assigned = emb.crossJoin(F.broadcast(_cent_array(cent))).select(
+        "vec_id", "e", "nrm", F.expr(_IVF_ASSIGN_SQL).alias("centroid_id")
     )
-    assigned = (
-        emb.crossJoin(F.broadcast(cent_arr))
-        .withColumn(
-            "centroid_id",
-            F.expr(
-                """
-                aggregate(
-                  transform(cents, c -> struct(
-                      c.centroid_id AS centroid_id,
-                      aggregate(zip_with(e, c.cv, (x, y) -> x * y),
-                                cast(0 as double), (acc, x) -> acc + x)
-                        / (nrm * c.cvn) AS c_cos)),
-                  struct(cast(-1 as bigint) AS centroid_id,
-                         cast('-Infinity' as double) AS c_cos),
-                  (best, c) -> IF(c.c_cos > best.c_cos, c, best)
-                ).centroid_id
-                """
-            ),
-        )
-        .select("vec_id", "e", "nrm", "centroid_id")
-    )
-    probes = (
-        q.join(F.broadcast(cent))
-        .withColumn("c_cos", cos_c)
-        .withColumn("c_rank", F.row_number().over(wa))
-        .where(F.col("c_rank") <= n_probe)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qn"),
-            "centroid_id",
-        )
-    )
+    probes = _probe_lists(q, cent, n_probe, F.col("e").alias("qe"), F.col("nrm").alias("qn"))
+    c = _renamed(assigned, "neighbor_id", {"e": "ce", "nrm": "cn", "centroid_id": "centroid_id"})
     scored = (
         F.broadcast(probes)
-        .join(
-            assigned.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("e").alias("ce"),
-                F.col("nrm").alias("cn"),
-                "centroid_id",
-            ),
-            "centroid_id",
-        )
+        .join(c, "centroid_id")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
+        .withColumn("cosine", _cosine())
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
+    return _cosine_out(scored, k)
+
+
+def _cent_array(cent: DataFrame) -> DataFrame:
+    """The coarse codebook as ONE broadcastable row `cents`. sort_array
+    orders the struct array by its first field (centroid_id), so the
+    `_IVF_ASSIGN_SQL` fold iterates in a fixed order regardless of how
+    collect_list saw the partitions."""
+    return cent.agg(
+        F.sort_array(F.collect_list(F.struct("centroid_id", "cv", "cvn"))).alias("cents")
     )
+
+
+def _probe_lists(q: DataFrame, cent: DataFrame, n_probe: int, *cols: F.Column) -> DataFrame:
+    """(query_id, *cols, centroid_id) for each query's `n_probe` nearest
+    inverted lists by cosine (ties to the smaller centroid_id, the oracle's
+    `ORDER BY cos DESC, centroid_id ASC`). `q` is a prepared (vec_id, e,
+    nrm) frame; `cols` may read the probed centroid `cv`."""
+    ranked = _top_k(
+        q.join(F.broadcast(cent)).withColumn("c_cos", _cosine("e", "cv", "nrm", "cvn")),
+        "c_cos", n_probe, rank="c_rank", part=("vec_id",), tie="centroid_id",
+    )
+    return ranked.select(F.col("vec_id").alias("query_id"), *cols, "centroid_id")
 
 
 def q_embedding_label_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -891,9 +815,7 @@ def trained_codebook(
     """Memoized trained codebook for one (corpus, geometry) pair."""
     key = (sf, n_sub, sub_dim, k, PQ_TRAIN_ITERS)
     if key not in _CW_CACHE:
-        base = load(spark, sf, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
+        base = _vectors(spark, sf)
         _CW_CACHE[key] = subspace_kmeans_fit(base, n_sub, sub_dim, k)
     return _CW_CACHE[key]
 
@@ -929,9 +851,7 @@ def _centroids_df(spark: SparkSession, cw: list[list[float]]) -> DataFrame:
     cent = spark.createDataFrame(
         [(j, list(v)) for j, v in enumerate(cw)], "centroid_id bigint, cv array<double>"
     )
-    return cent.withColumn("cvn", F.sqrt(F.expr(
-        "aggregate(zip_with(cv, cv, (x, y) -> x * y), cast(0 as double), (acc, x) -> acc + x)"
-    )))
+    return cent.withColumn("cvn", _norm("cv"))
 
 
 def _ivf_centroids(spark: SparkSession, sf: str) -> DataFrame:
@@ -968,11 +888,9 @@ def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
     NOT a plan or code regression — training is memoized outside the
     measured runs; the r6 number was ambient-load contention (same class
     as the r5 agg_count_distinct blip, 5ca86c1)."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf)
     cw = trained_codebook(spark, sf, PQ_M, PQ_SUB_DIM, PQ_K)
-    if not cw:  # empty corpus: no codebook and no rows (see _adc_codes_with_e)
+    if not cw:  # empty corpus: no codebook and no rows (see _pq_codes)
         return emb.select(
             "vec_id",
             F.expr("cast(null as bigint)").alias("pq_code"),
@@ -1056,8 +974,8 @@ def _encode_codes_sql(n_sub: int, sub_dim: int) -> str:
 
 
 def _adc_codes_with_e(spark: SparkSession, sf: str) -> DataFrame:
-    """Corpus rows as (vec_id, e, codes) with the ADC-geometry codes from a
-    VECTORIZED Arrow kernel (`mapInPandas` + numpy broadcasting).
+    """Corpus rows as (vec_id, e, codes) with the ADC-geometry codes from the
+    vectorized Arrow encode (`_pq_codes`).
 
     Why Python here: the encode is argmin over ADC_M x ADC_K = 2048
     codeword distances per row; as a higher-order-function fold that is
@@ -1067,68 +985,63 @@ def _adc_codes_with_e(spark: SparkSession, sf: str) -> DataFrame:
     seam the repo uses wherever JVM expressions can't execute efficiently
     (cf. dedup_embedding_cosine_vectorized), and the production shape: PQ
     encode is a vectorized ingest-time kernel in every real ANN system.
-
-    Float discipline: d2 accumulates term-by-term in subvector-element
-    order ((x1-c1)^2 + (x2-c2)^2, elementwise numpy ops — the identical
-    IEEE operation sequence as the SQL fold and the DuckDB oracle), and
-    `argmin` keeps the first minimum — so the codes are bit-equal to the
-    relational `_encode_codes_sql` form (pinned by
+    The codes are bit-equal to the relational `_encode_codes_sql` form
+    (`_d2_sub`; pinned by
     test_pq_training.py::test_arrow_codes_match_relational). The python
     node also materializes codes, so no repartition collapse-barrier is
     needed above the pair join."""
     cw = trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K)
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    if not cw:  # empty corpus: no codebook, no rows — keep the contract
-        # schema. The empty codes column must NOT be a foldable literal:
-        # ANSI constant folding would evaluate element_at(codes, 1) in the
-        # downstream dist expression at PLAN time and raise even with zero
-        # rows, so derive it from `e` (non-foldable, still always empty).
-        return emb.select(
-            "vec_id", "e",
-            F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes"),
-        )
-    return emb.mapInPandas(
-        _codes_kernel(cw, ["vec_id", "e"]),
-        "vec_id bigint, e array<double>, codes array<int>",
-    )
+    return _pq_codes(_vectors(spark, sf), cw, ADC_M, ADC_SUB)
 
 
-def _codes_kernel(
-    cw: list[list[float]],
-    passthrough: list[str],
-    n_sub: int = ADC_M,
-    sub_dim: int = ADC_SUB,
-):
-    """The shared vectorized encode kernel: batches of (…, e) in, the
-    passthrough columns plus per-subspace argmin `codes` out. d2 terms
-    accumulate in subvector-element order and argmin keeps the first
-    minimum — the identical IEEE sequence as `_encode_codes_sql` and the
-    oracle."""
-    import numpy as np
+def _d2_sub(X, C, lo: int, n: int):
+    """Squared L2 between elements [lo, lo + n) of each row of X and of each
+    row of C, as a len(X) x len(C) array. Terms accumulate one element at a
+    time in element order ((x1-c1)^2 + (x2-c2)^2 ...), the IEEE sequence of
+    the SQL folds and DuckDB's list_reduce, so every numpy kernel here is
+    bit-equal to its relational form (numpy's pairwise `.sum` would not be)."""
+    d2 = (X[:, None, lo] - C[None, :, lo]) ** 2
+    for i in range(1, n):
+        d2 = d2 + (X[:, None, lo + i] - C[None, :, lo + i]) ** 2
+    return d2
 
-    C = np.asarray(cw, dtype=np.float64)  # K x DIM, codeword-id order
 
-    def encode(batches):
+def _encode(X, C, n_sub: int, sub_dim: int):
+    """(codes, errs): each subspace's first-minimum codeword id — the strict
+    `<` fold's tie rule — and that codeword's d2, both n x n_sub."""
+    codes = np.empty((len(X), n_sub), dtype=np.int32)
+    errs = np.empty((len(X), n_sub), dtype=np.float64)
+    rows = np.arange(len(X))
+    for m in range(n_sub):
+        d2 = _d2_sub(X, C, m * sub_dim, sub_dim)
+        codes[:, m] = d2.argmin(1)
+        errs[:, m] = d2[rows, codes[:, m]]
+    return codes, errs
+
+
+def _arrow_kernel(fn):
+    """mapInPandas body: each non-empty batch's `e` vectors stacked into an
+    n x dim matrix X, out goes the column dict `fn(pdf, X)` returns."""
+
+    def run(batches):
         import pandas as pd
 
         for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["e"].to_numpy())
-            codes = np.empty((len(pdf), n_sub), dtype=np.int32)
-            for m in range(n_sub):
-                lo = m * sub_dim
-                d2 = (X[:, None, lo] - C[None, :, lo]) ** 2
-                for i in range(1, sub_dim):
-                    d2 = d2 + (X[:, None, lo + i] - C[None, :, lo + i]) ** 2
-                codes[:, m] = d2.argmin(1)  # first minimum, like the fold
-            out = {c: pdf[c] for c in passthrough}
-            out["codes"] = list(codes)
-            yield pd.DataFrame(out)
+            if len(pdf):
+                yield pd.DataFrame(fn(pdf, np.stack(pdf["e"].to_numpy())))
 
-    return encode
+    return run
+
+
+def _codes_kernel(cw: list[list[float]], n_sub: int = ADC_M, sub_dim: int = ADC_SUB):
+    """The shared vectorized encode: (vec_id, e) in, (vec_id, e, codes) out,
+    codes bit-equal to `_encode_codes_sql` and the oracle."""
+    C = np.asarray(cw, dtype=np.float64)  # K x DIM, codeword-id order
+
+    def encode(pdf, X):
+        return {"vec_id": pdf["vec_id"], "e": pdf["e"], "codes": list(_encode(X, C, n_sub, sub_dim)[0])}
+
+    return _arrow_kernel(encode)
 
 
 def _cents_tables(cents_cv: list[list[float]]):
@@ -1140,10 +1053,6 @@ def _cents_tables(cents_cv: list[list[float]]):
     Raises ValueError on an all-zero centroid: its cosine is 0/0 = NaN,
     which the SQL fold ranks above every value and `_assign_ids` below,
     so the two engines would silently disagree on every row."""
-    import math
-
-    import numpy as np
-
     CV = np.asarray(cents_cv, dtype=np.float64)  # NC x DIM, centroid-id order
     cvn = []
     for cv in cents_cv:
@@ -1167,8 +1076,6 @@ def _assign_ids(X, CV, cvn):
     FIRST maximum. Returns (ids int64, nrm). Requires nonzero rows (the
     callers keep the JVM-side `exists(e, x -> x <> 0.0d)` filter), so no
     NaN ever enters the comparison."""
-    import numpy as np
-
     dim = X.shape[1]
     acc = X[:, 0] * X[:, 0]
     for i in range(1, dim):
@@ -1203,35 +1110,17 @@ def _codes_assign_kernel(
     for the residual tier, the centroid-fetch broadcast join and zip_with.
     Assignment bit-equality per `_assign_ids`; the residual r = e - cv is
     one exact IEEE subtract per element (identical to zip_with); encode
-    bit-equality per `_codes_kernel`. Pinned against the relational forms
-    in tests/test_pq_training.py."""
-    import numpy as np
-
+    bit-equality per `_d2_sub`. Pinned against the relational forms in
+    tests/test_pq_training.py."""
     C = np.asarray(cw, dtype=np.float64)
     CV, cvn = _cents_tables(cents_cv)
 
-    def encode(batches):
-        import pandas as pd
+    def encode(pdf, X):
+        bid, _ = _assign_ids(X, CV, cvn)
+        E = X - CV[bid] if residual else X
+        return {"vec_id": pdf["vec_id"], "centroid_id": bid, "codes": list(_encode(E, C, n_sub, sub_dim)[0])}
 
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            X = np.stack(pdf["e"].to_numpy())
-            bid, _ = _assign_ids(X, CV, cvn)
-            E = X - CV[bid] if residual else X
-            codes = np.empty((n, n_sub), dtype=np.int32)
-            for m in range(n_sub):
-                lo = m * sub_dim
-                d2 = (E[:, None, lo] - C[None, :, lo]) ** 2
-                for i in range(1, sub_dim):
-                    d2 = d2 + (E[:, None, lo + i] - C[None, :, lo + i]) ** 2
-                codes[:, m] = d2.argmin(1)  # first minimum, like the fold
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "centroid_id": bid, "codes": list(codes)}
-            )
-
-    return encode
+    return _arrow_kernel(encode)
 
 
 def _assign_only_kernel(cents_cv: list[list[float]]):
@@ -1239,67 +1128,28 @@ def _assign_only_kernel(cents_cv: list[list[float]]):
     SemDeDup cluster router. nrm is computed IN the kernel with the same
     sequential fold + sqrt as `_norm` (bit-equal), so the JVM side no
     longer evaluates either HOF per row."""
-    import numpy as np
-
     CV, cvn = _cents_tables(cents_cv)
 
-    def assign(batches):
-        import pandas as pd
+    def assign(pdf, X):
+        bid, nrm = _assign_ids(X, CV, cvn)
+        return {"vec_id": pdf["vec_id"], "e": pdf["e"], "nrm": nrm, "cluster_id": bid}
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["e"].to_numpy())
-            bid, nrm = _assign_ids(X, CV, cvn)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "e": pdf["e"],
-                    "nrm": nrm,
-                    "cluster_id": bid,
-                }
-            )
-
-    return assign
+    return _arrow_kernel(assign)
 
 
 def _codes_errs_kernel(cw: list[list[float]], n_sub: int, sub_dim: int):
     """`_codes_kernel` variant that ALSO emits each subspace's argmin d2
     (the PQ reconstruction-error terms) — the quantize_pq encode, where the
     relational form paid the fold twice via getField(k)/getField(d2).
-    Identical IEEE sequence as `_pq_best_sql`: d2 terms accumulate in
-    subvector-element order, argmin keeps the first minimum, and the err is
-    THAT codeword's accumulated d2 — bit-equal by the same construction as
-    `_codes_kernel` (pinned in tests/test_pq_training.py for this
-    geometry, codes and errs both)."""
-    import numpy as np
-
+    Bit-equal to `_pq_best_sql`, codes and errs both (pinned in
+    tests/test_pq_training.py)."""
     C = np.asarray(cw, dtype=np.float64)  # K x DIM, codeword-id order
 
-    def encode(batches):
-        import pandas as pd
+    def encode(pdf, X):
+        codes, errs = _encode(X, C, n_sub, sub_dim)
+        return {"vec_id": pdf["vec_id"], "codes": list(codes), "errs": list(errs)}
 
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            X = np.stack(pdf["e"].to_numpy())
-            codes = np.empty((n, n_sub), dtype=np.int32)
-            errs = np.empty((n, n_sub), dtype=np.float64)
-            rows = np.arange(n)
-            for m in range(n_sub):
-                lo = m * sub_dim
-                d2 = (X[:, None, lo] - C[None, :, lo]) ** 2
-                for i in range(1, sub_dim):
-                    d2 = d2 + (X[:, None, lo + i] - C[None, :, lo + i]) ** 2
-                k = d2.argmin(1)  # first minimum, like the fold
-                codes[:, m] = k
-                errs[:, m] = d2[rows, k]
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "codes": list(codes), "errs": list(errs)}
-            )
-
-    return encode
+    return _arrow_kernel(encode)
 
 
 def _adc_dist_sql(n_sub: int) -> str:
@@ -1312,55 +1162,57 @@ def _adc_dist_sql(n_sub: int) -> str:
     )
 
 
-def _adc_scored(spark: SparkSession, sf: str) -> DataFrame:
-    """(query_id, neighbor_id, adc_dist) for every query x corpus pair —
-    the shared ADC scoring stage of `ann_pq_adc_topk` and the rerank tier.
+def _with_lut(q: DataFrame, cb: DataFrame, n_sub: int, sub_dim: int, *keys: str) -> DataFrame:
+    """(query_id, *keys, lut): each query row's n_sub x K ADC distance table
+    against the broadcast codebook `cb`, built from its `qe`."""
+    return q.crossJoin(F.broadcast(cb)).select(
+        "query_id", *keys, F.expr(_adc_lut_sql(n_sub, sub_dim)).alias("lut")
+    )
 
-    LUT form: each query precomputes its M x K distance table against the
-    broadcast codebook (one row per query), so the per-candidate work is M
-    integer-indexed lookups — no v-hat reconstruction, no DIM-term fold per
-    pair. Summation is grouped per subspace then across subspaces on BOTH
-    engines, keeping adc_dist bit-identical to the oracle."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+
+def _adc_scored_pairs(pairs: DataFrame, n_sub: int) -> DataFrame:
+    """(query_id, neighbor_id, adc_dist) of (query_id, lut) x (vec_id, codes)
+    pairs, self-matches excluded: n_sub LUT lookups per candidate."""
+    return pairs.where(F.col("query_id") != F.col("vec_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(F.expr(_adc_dist_sql(n_sub)), 4).alias("adc_dist"),
     )
-    cb = _adc_codebook(spark, sf)
-    # vectorized Arrow encode; the python node materializes codes, so the
-    # encode can never be collapsed into (and re-run per pair of) the join
-    codes = _adc_codes_with_e(spark, sf).select("vec_id", "codes")
-    q_lut = (
-        emb.where(F.col("vec_id") < 10)
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-        .crossJoin(F.broadcast(cb))
-        .select("query_id", F.expr(_adc_lut_sql(ADC_M, ADC_SUB)).alias("lut"))
-    )
-    return (
-        codes.crossJoin(F.broadcast(q_lut))
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(_adc_dist_sql(ADC_M)), 4).alias("adc_dist"),
-        )
-    )
+
+
+def _pq_scored(
+    q: DataFrame, c: DataFrame, codebook: list[list[float]], n_sub: int, sub_dim: int
+) -> DataFrame:
+    """ADC scoring of every (query_id, qe) x (vec_id, e) pair: the corpus is
+    scanned as its Arrow-encoded codes, each query precomputes its LUT
+    against the broadcast codebook (one row per query), so a candidate
+    costs n_sub integer-indexed lookups — no v-hat reconstruction, no
+    DIM-term fold per pair. Summation is grouped per subspace then across
+    subspaces on BOTH engines, keeping adc_dist bit-identical to the
+    oracle."""
+    codes = _pq_codes(c, codebook, n_sub, sub_dim).select("vec_id", "codes")
+    q_lut = _with_lut(q, _codebook_df(c.sparkSession, codebook), n_sub, sub_dim)
+    return _adc_scored_pairs(codes.crossJoin(F.broadcast(q_lut)), n_sub)
+
+
+#: the empty-codebook codes column (empty corpus). It must NOT be a foldable
+#: literal: ANSI constant folding would evaluate element_at(codes, 1) in the
+#: downstream dist expression at PLAN time and raise even with zero rows, so
+#: it is derived from `e` (non-foldable, still always empty).
+_EMPTY_CODES = "transform(slice(e, 1, 0), x -> cast(x as int))"
 
 
 def _pq_codes(
     c: DataFrame, codebook: list[list[float]], n_sub: int, sub_dim: int
 ) -> DataFrame:
     """(vec_id, e, codes) for ANY standardized (vec_id, e) frame — the
-    vectorized Arrow encode (`_codes_kernel`); the empty-codebook branch
-    keeps the contract schema with a NON-FOLDABLE empty codes column
-    (the `_adc_codes_with_e` constant-folding note)."""
+    vectorized Arrow encode (`_codes_kernel`); an empty codebook keeps the
+    contract schema."""
     if not codebook:
-        return c.select(
-            "vec_id",
-            "e",
-            F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes"),
-        )
+        return c.select("vec_id", "e", F.expr(_EMPTY_CODES).alias("codes"))
     id_t = c.schema["vec_id"].dataType.simpleString()
     return c.mapInPandas(
-        _codes_kernel(codebook, ["vec_id", "e"], n_sub, sub_dim),
+        _codes_kernel(codebook, n_sub, sub_dim),
         f"vec_id {id_t}, e array<double>, codes array<int>",
     )
 
@@ -1385,7 +1237,6 @@ def ann_pq_topk(
     2-dims-per-subspace ADC geometry; pass a pre-trained `codebook` to
     skip training (the fixture shim reuses the memoized one). Float
     discipline and 100 TB posture in `q_ann_pq_adc_topk`."""
-    spark = corpus.sparkSession
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("e"),
@@ -1409,33 +1260,37 @@ def ann_pq_topk(
         codebook = subspace_kmeans_fit(c, n_sub, sub_dim, n_codewords)
     else:
         sub_dim, codebook = 1, []
-    cb = _codebook_df(spark, codebook)
-    codes = _pq_codes(c, codebook, n_sub, sub_dim).select("vec_id", "codes")
-    q_lut = q.crossJoin(F.broadcast(cb)).select(
-        "query_id", F.expr(_adc_lut_sql(n_sub, sub_dim)).alias("lut")
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(q_lut))
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(_adc_dist_sql(n_sub)), 4).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", "nn_rank", "adc_dist")
+    return _top_k(_pq_scored(q, c, codebook, n_sub, sub_dim), "adc_dist", k, desc=False).select(
+        "query_id", "neighbor_id", "nn_rank", "adc_dist"
     )
 
 
 #: rerank shortlist width: ADC keeps the cheap codes-only scan; only
 #: RERANK_L candidates per query ever touch a full-precision vector again.
 PQ_RERANK_L = 32
+
+
+def _l2_rerank(scored: DataFrame, emb: DataFrame) -> DataFrame:
+    """Stage 2 of every PQ ladder: the ADC top-PQ_RERANK_L shortlist per
+    query re-scored by exact squared L2 against the full-precision vectors
+    of `emb` (vec_id, e), top-3 by exact distance. The shortlist is tiny
+    (queries x L), so it is broadcast INTO the corpus scan: full-precision
+    vectors are only materialized for shortlisted rows."""
+    shortlist = _top_k(scored, "adc_dist", PQ_RERANK_L, desc=False, rank="adc_rank").select(
+        "query_id", "neighbor_id"
+    )
+    q = emb.where(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
+    cand = emb.join(
+        F.broadcast(shortlist), emb.vec_id == shortlist.neighbor_id, "inner"
+    ).select("query_id", "neighbor_id", F.col("e").alias("ce"))
+    l2 = (
+        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
+        " cast(0 as double), (acc, d) -> acc + d)"
+    )
+    rescored = cand.join(F.broadcast(q), "query_id").select(
+        "query_id", "neighbor_id", F.round(F.expr(l2), 4).alias("l2_dist")
+    )
+    return _top_k(rescored, "l2_dist", 3, desc=False).select("query_id", "neighbor_id", "nn_rank", "l2_dist")
 
 
 def q_ann_pq_adc_rerank_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -1454,41 +1309,10 @@ def q_ann_pq_adc_rerank_topk(spark: SparkSession, sf: str) -> DataFrame:
     (tests/test_ann_recall.py, floor 0.9) — vs 0.73 for raw ADC. The
     codebook's distortion only has to keep the true neighbors inside the
     top-32 shortlist, not rank them."""
-    scored = _adc_scored(spark, sf)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("adc_rank", F.row_number().over(w_adc))
-        .where(F.col("adc_rank") <= PQ_RERANK_L)
-        .select("query_id", "neighbor_id")
-    )
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    # shortlist is tiny (queries x L): broadcast it INTO the corpus scan so
-    # full-precision vectors are only materialized for shortlisted rows.
-    cand = emb.join(
-        F.broadcast(shortlist), emb.vec_id == shortlist.neighbor_id, "inner"
-    ).select("query_id", "neighbor_id", F.col("e").alias("ce"))
-    l2 = (
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as double), (acc, d) -> acc + d)"
-    )
-    rescored = cand.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.expr(l2), 4).alias("l2_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("l2_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", "l2_dist")
-    )
+    emb = _vectors(spark, sf)
+    q = emb.where(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
+    cw = trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K)
+    return _l2_rerank(_pq_scored(q, emb, cw, ADC_M, ADC_SUB), emb)
 
 
 #: map-side coarse-quantizer assignment: cosine argmax against the one-row
@@ -1508,6 +1332,40 @@ _IVF_ASSIGN_SQL = """
 """
 
 
+def _assigned_codes(spark: SparkSession, sf: str, cw: list[list[float]], residual: bool) -> DataFrame:
+    """(vec_id, centroid_id, codes) for the nonzero corpus: coarse
+    assignment, the optional residual subtraction and the encode in ONE
+    zero-shuffle Arrow pass (`_codes_assign_kernel`). The r14 form ran the
+    interpreted `_IVF_ASSIGN_SQL` fold per row (plus, for residuals, a
+    centroid-fetch join and a zip_with) before the encode — ~0.5-0.8 s/pass
+    at sf0.1; the kernel's element-order accumulation is bit-equal (pinned
+    in test_pq_training.py). The python node materializes codes, so no
+    collapse barrier is needed above the probe join."""
+    nz = _nonzero_vectors(load(spark, sf, "embeddings"), norm=False)
+    if not cw:  # empty corpus: no codebook, no rows — keep the contract schema
+        return nz.select(
+            "vec_id", F.col("vec_id").alias("centroid_id"), F.expr(_EMPTY_CODES).alias("codes")
+        )
+    return nz.mapInPandas(
+        _codes_assign_kernel(cw, trained_codebook(spark, sf, 1, DIM, N_CENTROIDS), residual=residual),
+        "vec_id bigint, centroid_id bigint, codes array<int>",
+    )
+
+
+def _ivfpq_ladder(
+    spark: SparkSession, sf: str, cb: DataFrame, corpus: DataFrame, qe: F.Column
+) -> DataFrame:
+    """The IVF-PQ ladder over an encoded `corpus` (vec_id, centroid_id,
+    codes): each query's N_PROBE nearest lists (cosine routing), one LUT
+    per (query, probed list) built from `qe` against codebook `cb`, ADC
+    over the probed lists' codes only, then `_l2_rerank`."""
+    emb = _nonzero_vectors(load(spark, sf, "embeddings"))
+    probes = _probe_lists(emb.where(F.col("vec_id") < 10), _ivf_centroids(spark, sf), N_PROBE, qe.alias("qe"))
+    probes_lut = _with_lut(probes, cb, ADC_M, ADC_SUB, "centroid_id")
+    scored = _adc_scored_pairs(F.broadcast(probes_lut).join(corpus, "centroid_id"), ADC_M)
+    return _l2_rerank(scored, emb)
+
+
 def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """The full IVF-PQ retrieval ladder in one query — THE production ANN
     shape at 100 TB: (1) coarse-quantizer routing confines each query to its
@@ -1517,109 +1375,16 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     vectors and the top-3 returned.
 
     Scale shape, stage by stage: centroid assignment AND PQ encoding happen
-    in ONE zero-shuffle map pass (both the centroid array and the codebook
-    are one-row broadcasts), materialized behind the same repartition
-    barrier as `_adc_scored`; each (query, probed-list) row carries the
-    query's M x K distance LUT, so the probe join touches only
-    `n/NC * N_PROBE` candidate rows per query at M lookups each (partition
-    pruning on a real lake laid out by centroid_id); stage 3 touches
-    `n_queries x PQ_RERANK_L` full-precision rows via a broadcast shortlist
-    semi-join. Routing uses cosine (the IVF convention here), candidate
-    scoring and rerank use L2 — each stage mirrored exactly in the DuckDB
-    oracle."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm("e"))
-        # all-zero vector: cosine undefined, exclude (see q_ann_ivf_topk)
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    cent = _ivf_centroids(spark, sf)
-    cb = _adc_codebook(spark, sf)
-    # one map pass over the corpus: coarse assignment AND PQ encode both
-    # run inside the Arrow kernel (r15). The r14 form kept the argmax
-    # JVM-side fearing numpy's pairwise dot sums, but the kernel's
-    # explicit element-order accumulation (`_assign_ids`) IS the
-    # sequential cosine fold — bit-equal, pinned in test_pq_training.py —
-    # while the JVM fold was CodegenFallback (~0.5 s/pass interpreted at
-    # sf0.1). The python node materializes codes — no barrier needed.
-    cw_adc = trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K)
-    nz = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    if not cw_adc:  # empty corpus (see _adc_codes_with_e: non-foldable empty)
-        corpus = nz.select(
-            "vec_id",
-            F.col("vec_id").alias("centroid_id"),
-            F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes"),
-        )
-    else:
-        corpus = nz.mapInPandas(
-            _codes_assign_kernel(
-                cw_adc, trained_codebook(spark, sf, 1, DIM, N_CENTROIDS)
-            ),
-            "vec_id bigint, centroid_id bigint, codes array<int>",
-        )
-    cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
-    wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
-    probes = (
-        emb.where(F.col("vec_id") < 10)
-        .join(F.broadcast(cent))
-        .withColumn("c_cos", cos_c)
-        .withColumn("c_rank", F.row_number().over(wa))
-        .where(F.col("c_rank") <= N_PROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            "centroid_id",
-        )
-    )
-    # per-(query, probed-list) rows carry the query's M x K distance LUT;
-    # each candidate costs M lookups (see _adc_scored)
-    probes_lut = probes.crossJoin(F.broadcast(cb)).select(
-        "query_id", "centroid_id", F.expr(_adc_lut_sql(ADC_M, ADC_SUB)).alias("lut")
-    )
-    scored = (
-        F.broadcast(probes_lut)
-        .join(corpus, "centroid_id")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(_adc_dist_sql(ADC_M)), 4).alias("adc_dist"),
-        )
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("adc_rank", F.row_number().over(w_adc))
-        .where(F.col("adc_rank") <= PQ_RERANK_L)
-        .select("query_id", "neighbor_id")
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    cand = emb.join(
-        F.broadcast(shortlist), emb.vec_id == shortlist.neighbor_id, "inner"
-    ).select("query_id", "neighbor_id", F.col("e").alias("ce"))
-    l2 = (
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as double), (acc, d) -> acc + d)"
-    )
-    rescored = cand.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.expr(l2), 4).alias("l2_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("l2_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", "l2_dist")
-    )
+    in ONE zero-shuffle map pass (`_assigned_codes`); each (query,
+    probed-list) row carries the query's M x K distance LUT, so the probe
+    join touches only `n/NC * N_PROBE` candidate rows per query at M
+    lookups each (partition pruning on a real lake laid out by
+    centroid_id); stage 3 touches `n_queries x PQ_RERANK_L` full-precision
+    rows via a broadcast shortlist semi-join. Routing uses cosine (the IVF
+    convention here), candidate scoring and rerank use L2 — each stage
+    mirrored exactly in the DuckDB oracle."""
+    corpus = _assigned_codes(spark, sf, trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K), residual=False)
+    return _ivfpq_ladder(spark, sf, _adc_codebook(spark, sf), corpus, F.col("e"))
 
 
 def _residual_corpus(spark: SparkSession, sf: str) -> DataFrame:
@@ -1628,19 +1393,12 @@ def _residual_corpus(spark: SparkSession, sf: str) -> DataFrame:
     r = e - centroid — the quantity production IVF-PQ actually encodes
     (residuals have far less variance than raw vectors, so the same
     codebook budget buys less distortion). Assignment and the centroid
-    fetch are both against broadcast frames — zero corpus shuffle."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
+    fetch are both against broadcast frames — zero corpus shuffle. The
+    relational reference the residual codebook trains on."""
+    emb = _nonzero_vectors(load(spark, sf, "embeddings"))
     cent = _ivf_centroids(spark, sf)
-    cent_arr = cent.agg(
-        F.sort_array(F.collect_list(F.struct("centroid_id", "cv", "cvn"))).alias("cents")
-    )
     return (
-        emb.crossJoin(F.broadcast(cent_arr))
+        emb.crossJoin(F.broadcast(_cent_array(cent)))
         .select("vec_id", "e", F.expr(_IVF_ASSIGN_SQL).alias("centroid_id"))
         .join(F.broadcast(cent.select("centroid_id", "cv")), "centroid_id")
         .select(
@@ -1664,36 +1422,10 @@ def _residual_codebook(spark: SparkSession, sf: str) -> list[list[float]]:
 
 
 def _residual_codes(spark: SparkSession, sf: str) -> DataFrame:
-    """(vec_id, centroid_id, codes) — coarse assignment, residual
-    subtraction AND the residual-codebook encode fused into ONE Arrow pass
-    (r15; `_codes_assign_kernel(residual=True)`). The r14 chain ran the
-    interpreted `_IVF_ASSIGN_SQL` fold per row, a centroid-fetch broadcast
-    join and a zip_with BEFORE the encode kernel (~0.8 s/pass at sf0.1);
-    every stage is bit-equal by the `_assign_ids`/`_codes_kernel`
-    construction (pinned in tests/test_pq_training.py). Training
-    (`_residual_codebook`) still derives from the relational
-    `_residual_corpus` — memoized, and bit-equal to the kernel's residuals
-    by the same argument."""
-    cw = _residual_codebook(spark, sf)
-    nz = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    if not cw:  # empty corpus (see _adc_codes_with_e: non-foldable empty)
-        return nz.select(
-            "vec_id",
-            F.col("vec_id").alias("centroid_id"),
-            F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes"),
-        )
-    return nz.mapInPandas(
-        _codes_assign_kernel(
-            cw,
-            trained_codebook(spark, sf, 1, DIM, N_CENTROIDS),
-            residual=True,
-        ),
-        "vec_id bigint, centroid_id bigint, codes array<int>",
-    )
+    """(vec_id, centroid_id, codes) under the residual codebook: assignment,
+    residual subtraction and encode in one Arrow pass (`_assigned_codes`),
+    bit-equal to encoding `_residual_corpus` relationally."""
+    return _assigned_codes(spark, sf, _residual_codebook(spark, sf), residual=True)
 
 
 def q_ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -1711,76 +1443,12 @@ def q_ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB oracle re-runs the entire chain in unrolled MATERIALIZED CTEs
     and every stage's floats are bit-equal (same folds, rounding, ties).
 
-    Scale shape: identical to `ann_ivfpq_topk` (assignment + encode in
-    broadcast-only map passes, Arrow encode node materializes codes, probe
-    join touches n/NC * N_PROBE candidates, rerank via broadcast shortlist
-    semi-join); the residual subtraction is a free map-side zip."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    cent = _ivf_centroids(spark, sf)
+    Scale shape: identical to `ann_ivfpq_topk`; the residual subtraction
+    is a free map-side zip."""
     cb = _codebook_df(spark, _residual_codebook(spark, sf))
-    corpus = _residual_codes(spark, sf)
-    cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
-    wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
-    probes = (
-        emb.where(F.col("vec_id") < 10)
-        .join(F.broadcast(cent))
-        .withColumn("c_cos", cos_c)
-        .withColumn("c_rank", F.row_number().over(wa))
-        .where(F.col("c_rank") <= N_PROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            # the query's residual AGAINST THE PROBED LIST's centroid
-            F.zip_with("e", "cv", lambda x, y: x - y).alias("qe"),
-            "centroid_id",
-        )
-    )
-    probes_lut = probes.crossJoin(F.broadcast(cb)).select(
-        "query_id", "centroid_id", F.expr(_adc_lut_sql(ADC_M, ADC_SUB)).alias("lut")
-    )
-    scored = (
-        F.broadcast(probes_lut)
-        .join(corpus, "centroid_id")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(_adc_dist_sql(ADC_M)), 4).alias("adc_dist"),
-        )
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("adc_rank", F.row_number().over(w_adc))
-        .where(F.col("adc_rank") <= PQ_RERANK_L)
-        .select("query_id", "neighbor_id")
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    cand = emb.join(
-        F.broadcast(shortlist), emb.vec_id == shortlist.neighbor_id, "inner"
-    ).select("query_id", "neighbor_id", F.col("e").alias("ce"))
-    l2 = (
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as double), (acc, d) -> acc + d)"
-    )
-    rescored = cand.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.expr(l2), 4).alias("l2_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("l2_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", "l2_dist")
-    )
+    # the query's residual AGAINST THE PROBED LIST's centroid
+    qe = F.zip_with("e", "cv", lambda x, y: x - y)
+    return _ivfpq_ladder(spark, sf, cb, _residual_codes(spark, sf), qe)
 
 
 def q_embedding_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
@@ -1823,18 +1491,76 @@ _COS_DUCK = (
 )
 
 
-def _bucket_duck(e: str) -> str:
-    bits = " + ".join(
-        f"(CASE WHEN list_dot_product({e}, {_plane_duck(j)}) > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(N_PLANES)
-    )
-    return f"({bits})::INT"
+def _cosine_ranked_duck(k: int) -> str:
+    """Oracle twin of `_cosine_out` over a `scored(query_id, neighbor_id,
+    cosine)` CTE: the shared top-k tail, ties on ascending neighbor_id."""
+    return f"""ranked AS (
+            SELECT query_id, neighbor_id, cosine,
+                   row_number() OVER (PARTITION BY query_id
+                                      ORDER BY cosine DESC, neighbor_id ASC) AS nn_rank
+            FROM scored
+        )
+        SELECT query_id, neighbor_id, nn_rank, round(cosine, 4) AS cosine
+        FROM ranked WHERE nn_rank <= {k}"""
 
 
-def _mt_bucket_duck(t: int, e: str) -> str:
+def _l2_rerank_duck(
+    q: str = "(SELECT vec_id AS query_id, e AS qe FROM base WHERE vec_id < 10)",
+) -> str:
+    """Oracle twin of `_l2_rerank` over a `scored(query_id, neighbor_id,
+    adc_dist)` CTE, `base(vec_id, e)` and the query relation `q`."""
+    return f"""adc_ranked AS (
+            SELECT query_id, neighbor_id,
+                   row_number() OVER (PARTITION BY query_id
+                                      ORDER BY adc_dist ASC, neighbor_id ASC) AS adc_rank
+            FROM scored
+        ), shortlist AS (
+            SELECT query_id, neighbor_id FROM adc_ranked WHERE adc_rank <= {PQ_RERANK_L}
+        ), rescored AS (
+            SELECT s.query_id, s.neighbor_id,
+                   round(list_reduce(list_transform(generate_series(1, {DIM}),
+                         i -> (qq.qe[i] - bb.e[i]) * (qq.qe[i] - bb.e[i])),
+                         (a, b) -> a + b), 4) AS l2_dist
+            FROM shortlist s
+            JOIN base bb ON bb.vec_id = s.neighbor_id
+            JOIN {q} qq ON qq.query_id = s.query_id
+        ), reranked AS (
+            SELECT query_id, neighbor_id, l2_dist,
+                   row_number() OVER (PARTITION BY query_id
+                                      ORDER BY l2_dist ASC, neighbor_id ASC)::INT AS nn_rank
+            FROM rescored
+        )
+        SELECT query_id, neighbor_id, nn_rank, l2_dist
+        FROM reranked WHERE nn_rank <= 3"""
+
+
+#: oracle twin of `_binq_frame` + `_sides`: nonzero vectors, packed sign
+#: words, and the q / c sides every binary-tier oracle starts from
+_BINQ_SIDES_DUCK = """WITH emb AS MATERIALIZED (
+            SELECT vec_id, embedding::DOUBLE[] AS e
+            FROM embeddings
+            WHERE len(list_filter(embedding, x -> x <> 0)) > 0
+        ), packed AS MATERIALIZED (
+            SELECT vec_id,
+                   bit_or(CASE WHEN i < 32 AND e[i + 1] > 0
+                               THEN (1::BIGINT << i) ELSE 0 END) AS w0,
+                   bit_or(CASE WHEN i >= 32 AND e[i + 1] > 0
+                               THEN (1::BIGINT << (i - 32)) ELSE 0 END) AS w1
+            FROM emb, range(64) r(i) GROUP BY vec_id
+        ), q AS (
+            SELECT p.vec_id AS query_id, e.e AS qe, p.w0 AS q0, p.w1 AS q1
+            FROM packed p JOIN emb e USING (vec_id) WHERE p.vec_id < 10
+        ), c AS (
+            SELECT p.vec_id AS neighbor_id, e.e AS ce, p.w0 AS c0, p.w1 AS c1
+            FROM packed p JOIN emb e USING (vec_id)
+        ), """
+
+
+def _bucket_duck(e: str, planes: list[list[float]] = PLANES) -> str:
+    """DuckDB twin of `_sign_bucket` over the DOUBLE[] expression `e`."""
     bits = " + ".join(
-        f"(CASE WHEN list_dot_product({e}, {_mt_plane_duck(t, j)}) > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(PLANES_PER_TABLE)
+        f"(CASE WHEN list_dot_product({e}, {_duck_lit(plane)}) > 0 THEN {1 << j} ELSE 0 END)"
+        for j, plane in enumerate(planes)
     )
     return f"({bits})::INT"
 
@@ -1874,8 +1600,7 @@ def _kmeans_assign_expr(cents: list[list[float]], dim: int) -> F.Column:
     and the strict `<` fold over ascending cid keeps the smallest id on
     ties — matching numpy argmin's first-hit rule in the reference test."""
     lit = "array(" + ", ".join(
-        "struct(%d as cid, array(%s) as cv)" % (cid, ", ".join(f"{v!r}D" for v in cv))
-        for cid, cv in enumerate(cents)
+        f"struct({cid} as cid, {_vec_lit(cv)} as cv)" for cid, cv in enumerate(cents)
     ) + ")"
     return F.expr(
         f"""
@@ -2079,9 +1804,7 @@ def q_embedding_standardize(spark: SparkSession, sf: str) -> DataFrame:
     map-side — at 100 TB this is one scan + one scan, zero data shuffle.
     mu/sd are rounded 6 before use so both engines standardize with
     identical constants (the house trainer discipline)."""
-    base = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    base = _vectors(spark, sf)
     stats = base.agg(
         *[
             F.round(F.avg(F.element_at("e", i)), 6).alias(f"m{i}")
@@ -2136,11 +1859,7 @@ def q_embedding_matryoshka_recall(spark: SparkSession, sf: str) -> DataFrame:
     shortlist. At 100 TB the corpus side would ride the LSH buckets
     (ann_lsh_topk) instead of the brute-force cross join — the census
     itself is unchanged."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
+    emb = _nonzero_vectors(load(spark, sf, "embeddings"), norm=False)
     norms = [
         F.sqrt(_dot(f"slice(e, 1, {d})", f"slice(e, 1, {d})")).alias(f"n{d}")
         for d in MATRYOSHKA_DIMS
@@ -2179,18 +1898,13 @@ def q_embedding_matryoshka_recall(spark: SparkSession, sf: str) -> DataFrame:
     ).select(
         "query_id", "neighbor_id", F.col("x.dim").alias("dim"), F.col("x.cosine").alias("cosine")
     ).where(F.col("cosine").isNotNull())
-    w = Window.partitionBy("dim", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
     # r14 note: pinning topk for its two consumers measured a wash (2.46
     # vs 2.37 s min-of-4 paired) — both consumers share one physical plan
     # and the scoring subtree's window exchange is reused; see the
     # orders_open_interval_census note for the pin-vs-ReusedExchange rule.
-    topk = (
-        per_dim.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= MATRYOSHKA_K)
-        .select("dim", "query_id", "neighbor_id")
-    )
+    topk = _top_k(
+        per_dim, "cosine", MATRYOSHKA_K, rank="rk", part=("dim", "query_id")
+    ).select("dim", "query_id", "neighbor_id")
     full_top = topk.where(F.col("dim") == DIM).select(
         F.col("query_id").alias("full_q"), F.col("neighbor_id").alias("hit_id")
     )
@@ -2229,6 +1943,33 @@ def _binq_word(e: str, off: int) -> F.Column:
     )
 
 
+def _binq_frame(spark: SparkSession, sf: str) -> DataFrame:
+    """(vec_id, e, nrm, w0, w1): the nonzero corpus with its two packed
+    32-bit sign words — the shared input of every binary tier."""
+    return _nonzero_vectors(load(spark, sf, "embeddings")).select(
+        "vec_id", "e", "nrm", _binq_word("e", 0).alias("w0"), _binq_word("e", 32).alias("w1")
+    )
+
+
+#: the binary tiers' query/corpus sides: vectors, norms and sign words
+_BINQ_QC = {**_QC, "w0": ("q0", "c0"), "w1": ("q1", "c1")}
+
+
+def _hamming_rerank(pairs: DataFrame, *extra: str) -> DataFrame:
+    """Shortlist + rerank tail of every binary tier: Hamming distance of
+    the packed sign words (bit_count of xor) for each candidate pair, the
+    per-query Hamming top-BINQ_SHORTLIST, then exact cosine over the
+    shortlist only and the top-BINQ_TOPK. Both cuts are total orders
+    ((hamming, neighbor_id), then (cosine, neighbor_id)), so they are
+    engine-exact. `extra` names candidate columns carried to the output."""
+    ham = pairs.withColumn("hamming", F.expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
+    short = _top_k(ham, "hamming", BINQ_SHORTLIST, desc=False, rank="h_rank")
+    rer = short.withColumn("cosine", _cosine())
+    return _top_k(rer, "cosine", BINQ_TOPK).select(
+        "query_id", "neighbor_id", "nn_rank", "hamming", *extra, F.round("cosine", 4).alias("cosine")
+    )
+
+
 def q_ann_binary_hamming_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Binary-quantization retrieval ladder (sign(x) 1-bit codes — the
     LSH-for-cosine hashing of Charikar 2002 with coordinate planes, as
@@ -2242,62 +1983,9 @@ def q_ann_binary_hamming_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: the Hamming scan reads 16 BYTES per corpus vector instead
     of 512 (the 32x memory-bandwidth win is the whole point at 100 TB);
-    probes broadcast; the exact rerank touches only shortlist rows. Both
-    rank boundaries are total orders ((hamming, neighbor_id), then
-    (cosine, neighbor_id)) so the cut is engine-exact."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        .select(
-            "vec_id",
-            "e",
-            _norm("e").alias("nrm"),
-            _binq_word("e", 0).alias("w0"),
-            _binq_word("e", 32).alias("w1"),
-        )
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-        F.col("w0").alias("q0"),
-        F.col("w1").alias("q1"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-        F.col("w0").alias("c0"),
-        F.col("w1").alias("c1"),
-    )
-    ham = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("hamming", F.expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    short = ham.withColumn("h_rank", F.row_number().over(w_short)).where(
-        F.col("h_rank") <= BINQ_SHORTLIST
-    )
-    rer = short.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    w_fin = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("nn_rank", F.row_number().over(w_fin))
-        .where(F.col("nn_rank") <= BINQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            "hamming",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    probes broadcast; the exact rerank touches only shortlist rows."""
+    q, c = _sides(_binq_frame(spark, sf), _BINQ_QC)
+    return _hamming_rerank(_cross(q, c))
 
 
 #: banded probe tier over the sign codes: 8 bands x 8 bits cover the
@@ -2306,6 +1994,50 @@ def q_ann_binary_hamming_topk(spark: SparkSession, sf: str) -> DataFrame:
 #: lossless for Hamming <= 7, recall-approximate beyond)
 _BINQ_BANDS = 8
 _BINQ_BAND_BITS = 8
+
+
+def _band_val(b: int) -> F.Column:
+    """Band b's 8-bit value of the packed sign code (w0 holds bands 0-3)."""
+    word = F.col("w0") if b < _BINQ_BANDS // 2 else F.col("w1")
+    shift = (b % (_BINQ_BANDS // 2)) * _BINQ_BAND_BITS
+    return F.shiftright(word, shift).bitwiseAND(F.lit((1 << _BINQ_BAND_BITS) - 1))
+
+
+def _band_keys(df: DataFrame, id_alias: str, flips: int = 0) -> DataFrame:
+    """(id_alias, band, val): per band, the exact 8-bit value and, with
+    `flips` > 0, the values with one of its lowest `flips` bits flipped.
+    A corpus band value matches AT MOST ONE of a band's probe keys (they
+    are pairwise distinct), so per-pair match counts count bands."""
+    keys = [
+        F.struct(
+            F.lit(b).alias("band"),
+            (_band_val(b) if i == 0 else _band_val(b).bitwiseXOR(F.lit(1 << (i - 1)))).alias("val"),
+        )
+        for b in range(_BINQ_BANDS)
+        for i in range(flips + 1)
+    ]
+    return df.select(
+        F.col("vec_id").alias(id_alias), F.explode(F.array(*keys)).alias("bv")
+    ).select(id_alias, F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
+
+
+def _banded_topk(emb: DataFrame, flips: int, count_col: str) -> DataFrame:
+    """Banded candidate generation + `_hamming_rerank`: each query's
+    `_band_keys(flips)` probe keys equi-join the corpus band index (one
+    exact key per band per vector); `count_col` counts each pair's
+    matching bands. Band rows carry only (vec_id, band, val) — vectors
+    never transit the band join; candidates join back to the packed frame
+    by id (broadcast query side: the candidate set is per-query bounded)."""
+    qb = _band_keys(emb.where(F.col("vec_id") < 10), "query_id", flips)
+    cand = (
+        F.broadcast(qb)
+        .join(_band_keys(emb, "vec_id"), ["band", "val"])
+        .where(F.col("query_id") != F.col("vec_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.count("*").alias(count_col))
+    )
+    q, c = _sides(emb, _BINQ_QC)
+    return _hamming_rerank(cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id"), count_col)
 
 
 def q_ann_binary_hamming_banded_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -2325,94 +2057,8 @@ def q_ann_binary_hamming_banded_topk(spark: SparkSession, sf: str) -> DataFrame:
     rank boundaries are integer/total-order exact; the ORACLE runs the
     exhaustive pairwise join with the identical band-agreement predicate,
     so hash equality proves the banded index reproduces the exhaustive
-    semantics (the ppjoin discipline).
-
-    Scale shape: band rows carry only (vec_id, band, val) — vectors never
-    transit the band join; the shortlist joins back to the packed frame
-    by id (broadcast: candidate set is per-query bounded); the exact
-    rerank touches only shortlist rows."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        .select(
-            "vec_id",
-            "e",
-            _norm("e").alias("nrm"),
-            _binq_word("e", 0).alias("w0"),
-            _binq_word("e", 32).alias("w1"),
-        )
-    )
-
-    def _band_val(b: int) -> F.Column:
-        word = F.col("w0") if b < _BINQ_BANDS // 2 else F.col("w1")
-        shift = (b % (_BINQ_BANDS // 2)) * _BINQ_BAND_BITS
-        return F.shiftright(word, shift).bitwiseAND(
-            F.lit((1 << _BINQ_BAND_BITS) - 1)
-        )
-
-    bands = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), _band_val(b).alias("val"))
-                    for b in range(_BINQ_BANDS)
-                ]
-            )
-        ).alias("bv"),
-    ).select("vec_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-    qb = bands.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "band", "val"
-    )
-    cand = (
-        F.broadcast(qb)
-        .join(bands, ["band", "val"])
-        .where(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.count("*").alias("n_bands_hit"))
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-        F.col("w0").alias("q0"),
-        F.col("w1").alias("q1"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-        F.col("w0").alias("c0"),
-        F.col("w1").alias("c1"),
-    )
-    ham = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("hamming", F.expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    short = ham.withColumn("h_rank", F.row_number().over(w_short)).where(
-        F.col("h_rank") <= BINQ_SHORTLIST
-    )
-    rer = short.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    w_fin = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("nn_rank", F.row_number().over(w_fin))
-        .where(F.col("nn_rank") <= BINQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            "hamming",
-            "n_bands_hit",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    semantics (the ppjoin discipline)."""
+    return _banded_topk(_binq_frame(spark, sf), 0, "n_bands_hit")
 
 
 def q_ann_binary_hamming_multiprobe_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -2435,111 +2081,7 @@ def q_ann_binary_hamming_multiprobe_topk(spark: SparkSession, sf: str) -> DataFr
     identical per-band bit_count(xor) <= 1 predicate, so hash equality
     proves the 72-key probe expansion reproduces the near-band semantics
     exactly (the banded tier's discipline, one Hamming ring wider)."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        .select(
-            "vec_id",
-            "e",
-            _norm("e").alias("nrm"),
-            _binq_word("e", 0).alias("w0"),
-            _binq_word("e", 32).alias("w1"),
-        )
-    )
-
-    def _band_val(b: int) -> F.Column:
-        word = F.col("w0") if b < _BINQ_BANDS // 2 else F.col("w1")
-        shift = (b % (_BINQ_BANDS // 2)) * _BINQ_BAND_BITS
-        return F.shiftright(word, shift).bitwiseAND(
-            F.lit((1 << _BINQ_BAND_BITS) - 1)
-        )
-
-    # corpus index: one exact (band, value) key per band per vector
-    bands = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), _band_val(b).alias("val"))
-                    for b in range(_BINQ_BANDS)
-                ]
-            )
-        ).alias("bv"),
-    ).select("vec_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-    # query probes: exact value + the 8 one-bit flips per band. A corpus
-    # band value matches AT MOST ONE of a band's 9 probe keys (they are
-    # pairwise distinct), so the per-pair match count below is exactly
-    # the number of bands within <= 1 bit.
-    probe_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            (
-                _band_val(b)
-                if i == 0
-                else _band_val(b).bitwiseXOR(F.lit(1 << (i - 1)))
-            ).alias("val"),
-        )
-        for b in range(_BINQ_BANDS)
-        for i in range(_BINQ_BAND_BITS + 1)
-    ]
-    qb = (
-        emb.where(F.col("vec_id") < 10)
-        .select("vec_id", "w0", "w1")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(F.array(*probe_structs)).alias("bv"),
-        )
-        .select("query_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-    )
-    cand = (
-        F.broadcast(qb)
-        .join(bands, ["band", "val"])
-        .where(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.count("*").alias("n_bands_near"))
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-        F.col("w0").alias("q0"),
-        F.col("w1").alias("q1"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-        F.col("w0").alias("c0"),
-        F.col("w1").alias("c1"),
-    )
-    ham = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("hamming", F.expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    short = ham.withColumn("h_rank", F.row_number().over(w_short)).where(
-        F.col("h_rank") <= BINQ_SHORTLIST
-    )
-    rer = short.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    w_fin = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("nn_rank", F.row_number().over(w_fin))
-        .where(F.col("nn_rank") <= BINQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            "hamming",
-            "n_bands_near",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _banded_topk(_binq_frame(spark, sf), _BINQ_BAND_BITS, "n_bands_near")
 
 
 def q_embedding_anisotropy(spark: SparkSession, sf: str) -> DataFrame:
@@ -2562,12 +2104,7 @@ def q_embedding_anisotropy(spark: SparkSession, sf: str) -> DataFrame:
     order); the final ||S||^2 fold runs over the d-SORTED 64-element
     array in fixed left-to-right order, identically written in the
     oracle's unrolled left-associative chain."""
-    base = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        .select("e", _norm("e").alias("nrm"))
-    )
+    base = _nonzero_vectors(load(spark, sf, "embeddings")).select("e", "nrm")
     qrows = base.select("nrm", F.posexplode("e").alias("d", "v")).select(
         "d",
         F.expr("cast(floor(v / nrm * 1000000.0d + 0.5) as bigint)").alias("q"),
@@ -2608,10 +2145,6 @@ def _jl_matrix() -> list[list[float]]:
 JL_ROWS = _jl_matrix()
 
 
-def _jl_row_lit(j: int) -> str:
-    return "array(" + ", ".join(f"{v}D" for v in JL_ROWS[j]) + ")"
-
-
 def _jl_row_duck(j: int) -> str:
     return "[" + ", ".join(repr(v) for v in JL_ROWS[j]) + "]"
 
@@ -2636,13 +2169,11 @@ def q_embedding_jl_distortion(spark: SparkSession, sf: str) -> DataFrame:
     shuffle) and cuts downstream distance math 4x; probes broadcast; the
     census is one combine-friendly groupBy. At 100 TB project once,
     write the JL_DIM sketch column, and run distance passes on it."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf)
     proj = F.array(
         *[
             F.expr(
-                f"aggregate(zip_with(e, {_jl_row_lit(j)}, (x, r) -> x * r),"
+                f"aggregate(zip_with(e, {_vec_lit(JL_ROWS[j])}, (x, r) -> x * r),"
                 f" cast(0 as double), (acc, x) -> acc + x)"
             )
             for j in range(JL_DIM)
@@ -2900,29 +2431,7 @@ def _pq_adc_rerank_oracle() -> str:
     Same sequential fold / rounding / tie-break discipline as the Spark side."""
     return f"""
         {_pq_adc_scored_ctes()}
-        , adc_ranked AS (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_dist ASC, neighbor_id ASC) AS adc_rank
-            FROM scored
-        ), shortlist AS (
-            SELECT query_id, neighbor_id FROM adc_ranked WHERE adc_rank <= {PQ_RERANK_L}
-        ), rescored AS (
-            SELECT s.query_id, s.neighbor_id,
-                   round(list_reduce(list_transform(generate_series(1, {DIM}),
-                         i -> (qq.qe[i] - bb.e[i]) * (qq.qe[i] - bb.e[i])),
-                         (a, b) -> a + b), 4) AS l2_dist
-            FROM shortlist s
-            JOIN base bb ON bb.vec_id = s.neighbor_id
-            JOIN q qq ON qq.query_id = s.query_id
-        ), reranked AS (
-            SELECT query_id, neighbor_id, l2_dist,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY l2_dist ASC, neighbor_id ASC)::INT AS nn_rank
-            FROM rescored
-        )
-        SELECT query_id, neighbor_id, nn_rank, l2_dist
-        FROM reranked WHERE nn_rank <= 3
+        , {_l2_rerank_duck('q')}
     """
 
 
@@ -2955,30 +2464,7 @@ def _ivfpq_oracle() -> str:
                    round({_adc_dist_duck(ADC_M)}, 4) AS adc_dist
             FROM probes_lut p JOIN cand v ON v.centroid_id = p.centroid_id
             WHERE p.query_id != v.vec_id
-        ), adc_ranked AS (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_dist ASC, neighbor_id ASC) AS adc_rank
-            FROM scored
-        ), shortlist AS (
-            SELECT query_id, neighbor_id FROM adc_ranked WHERE adc_rank <= {PQ_RERANK_L}
-        ), rescored AS (
-            SELECT s.query_id, s.neighbor_id,
-                   round(list_reduce(list_transform(generate_series(1, {DIM}),
-                         i -> (qq.qe[i] - bb.e[i]) * (qq.qe[i] - bb.e[i])),
-                         (a, b) -> a + b), 4) AS l2_dist
-            FROM shortlist s
-            JOIN base bb ON bb.vec_id = s.neighbor_id
-            JOIN (SELECT vec_id AS query_id, e AS qe FROM base WHERE vec_id < 10) qq
-              ON qq.query_id = s.query_id
-        ), reranked AS (
-            SELECT query_id, neighbor_id, l2_dist,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY l2_dist ASC, neighbor_id ASC)::INT AS nn_rank
-            FROM rescored
-        )
-        SELECT query_id, neighbor_id, nn_rank, l2_dist
-        FROM reranked WHERE nn_rank <= 3
+        ), {_l2_rerank_duck()}
     """
 
 
@@ -3090,30 +2576,7 @@ def _ivfpq_residual_oracle() -> str:
                    round({_adc_dist_duck(ADC_M)}, 4) AS adc_dist
             FROM probes_lut p JOIN cand v ON v.centroid_id = p.centroid_id
             WHERE p.query_id != v.vec_id
-        ), adc_ranked AS (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc_dist ASC, neighbor_id ASC) AS adc_rank
-            FROM scored
-        ), shortlist AS (
-            SELECT query_id, neighbor_id FROM adc_ranked WHERE adc_rank <= {PQ_RERANK_L}
-        ), rescored AS (
-            SELECT s.query_id, s.neighbor_id,
-                   round(list_reduce(list_transform(generate_series(1, {DIM}),
-                         i -> (qq.qe[i] - bb.e[i]) * (qq.qe[i] - bb.e[i])),
-                         (a, b) -> a + b), 4) AS l2_dist
-            FROM shortlist s
-            JOIN base bb ON bb.vec_id = s.neighbor_id
-            JOIN (SELECT vec_id AS query_id, e AS qe FROM base WHERE vec_id < 10) qq
-              ON qq.query_id = s.query_id
-        ), reranked AS (
-            SELECT query_id, neighbor_id, l2_dist,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY l2_dist ASC, neighbor_id ASC)::INT AS nn_rank
-            FROM rescored
-        )
-        SELECT query_id, neighbor_id, nn_rank, l2_dist
-        FROM reranked WHERE nn_rank <= 3
+        ), {_l2_rerank_duck()}
     """
 
 
@@ -3333,14 +2796,7 @@ ORACLES = {
         ), scored AS (
             SELECT query_id, neighbor_id, {_COS_DUCK} AS cosine
             FROM q CROSS JOIN c WHERE query_id != neighbor_id
-        ), ranked AS (
-            SELECT query_id, neighbor_id, cosine,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id ASC) AS nn_rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, nn_rank, round(cosine, 4) AS cosine
-        FROM ranked WHERE nn_rank <= 5
+        ), {_cosine_ranked_duck(5)}
     """,
     "ann_lsh_buckets": f"""
         WITH b AS (
@@ -3355,7 +2811,7 @@ ORACLES = {
         WITH keyed AS (
             {" UNION ALL ".join(
                 f"SELECT vec_id, embedding::DOUBLE[] AS e, {t} AS tbl, "
-                f"{_mt_bucket_duck(t, 'embedding::DOUBLE[]')} AS bucket FROM embeddings"
+                f"{_bucket_duck('embedding::DOUBLE[]', MT_PLANES[t])} AS bucket FROM embeddings"
                 " WHERE len(list_filter(embedding, x -> x <> 0)) > 0"
                 for t in range(N_TABLES)
             )}
@@ -3377,14 +2833,7 @@ ORACLES = {
             FROM cand
             JOIN vecs qv ON qv.vec_id = cand.query_id
             JOIN vecs cv ON cv.vec_id = cand.neighbor_id
-        ), ranked AS (
-            SELECT query_id, neighbor_id, cosine,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id ASC) AS nn_rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, nn_rank, round(cosine, 4) AS cosine
-        FROM ranked WHERE nn_rank <= 3
+        ), {_cosine_ranked_duck(3)}
     """,
     "ann_lsh_topk": f"""
         WITH b AS (
@@ -3399,14 +2848,7 @@ ORACLES = {
         ), scored AS (
             SELECT query_id, neighbor_id, {_COS_DUCK} AS cosine
             FROM q JOIN c ON qb = cb AND query_id != neighbor_id
-        ), ranked AS (
-            SELECT query_id, neighbor_id, cosine,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id ASC) AS nn_rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, nn_rank, round(cosine, 4) AS cosine
-        FROM ranked WHERE nn_rank <= 3
+        ), {_cosine_ranked_duck(3)}
     """,
     "ann_lsh_multiprobe_topk": f"""
         WITH b AS (
@@ -3424,14 +2866,7 @@ ORACLES = {
         ), scored AS (
             SELECT query_id, neighbor_id, {_COS_DUCK} AS cosine
             FROM probes q JOIN c ON qb = cb AND query_id != neighbor_id
-        ), ranked AS (
-            SELECT query_id, neighbor_id, cosine,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id ASC) AS nn_rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, nn_rank, round(cosine, 4) AS cosine
-        FROM ranked WHERE nn_rank <= 3
+        ), {_cosine_ranked_duck(3)}
     """,
     "ann_ivf_topk": f"""
         WITH base AS (
@@ -3449,14 +2884,7 @@ ORACLES = {
             SELECT query_id, neighbor_id, {_COS_DUCK} AS cosine
             FROM probes p JOIN assigned a USING (centroid_id)
             WHERE query_id != neighbor_id
-        ), ranked AS (
-            SELECT query_id, neighbor_id, cosine,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id ASC) AS nn_rank
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, nn_rank, round(cosine, 4) AS cosine
-        FROM ranked WHERE nn_rank <= 3
+        ), {_cosine_ranked_duck(3)}
     """,
     "embedding_hard_negatives": f"""
         WITH b AS (
@@ -3528,24 +2956,7 @@ ORACLES = {
         GROUP BY 1
     """,
     "ann_binary_hamming_topk": f"""
-        WITH emb AS MATERIALIZED (
-            SELECT vec_id, embedding::DOUBLE[] AS e
-            FROM embeddings
-            WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-        ), packed AS MATERIALIZED (
-            SELECT vec_id,
-                   bit_or(CASE WHEN i < 32 AND e[i + 1] > 0
-                               THEN (1::BIGINT << i) ELSE 0 END) AS w0,
-                   bit_or(CASE WHEN i >= 32 AND e[i + 1] > 0
-                               THEN (1::BIGINT << (i - 32)) ELSE 0 END) AS w1
-            FROM emb, range(64) r(i) GROUP BY vec_id
-        ), q AS (
-            SELECT p.vec_id AS query_id, e.e AS qe, p.w0 AS q0, p.w1 AS q1
-            FROM packed p JOIN emb e USING (vec_id) WHERE p.vec_id < 10
-        ), c AS (
-            SELECT p.vec_id AS neighbor_id, e.e AS ce, p.w0 AS c0, p.w1 AS c1
-            FROM packed p JOIN emb e USING (vec_id)
-        ), ham AS (
+        {_BINQ_SIDES_DUCK}ham AS (
             SELECT query_id, neighbor_id, qe, ce,
                    bit_count(xor(q0, c0)) + bit_count(xor(q1, c1)) AS hamming
             FROM q CROSS JOIN c WHERE query_id != neighbor_id
@@ -3569,24 +2980,7 @@ ORACLES = {
     # predicate — hash equality proves the Spark band INDEX (equi-join on
     # (band, value)) reproduces the banded candidate semantics exactly
     "ann_binary_hamming_banded_topk": f"""
-        WITH emb AS MATERIALIZED (
-            SELECT vec_id, embedding::DOUBLE[] AS e
-            FROM embeddings
-            WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-        ), packed AS MATERIALIZED (
-            SELECT vec_id,
-                   bit_or(CASE WHEN i < 32 AND e[i + 1] > 0
-                               THEN (1::BIGINT << i) ELSE 0 END) AS w0,
-                   bit_or(CASE WHEN i >= 32 AND e[i + 1] > 0
-                               THEN (1::BIGINT << (i - 32)) ELSE 0 END) AS w1
-            FROM emb, range(64) r(i) GROUP BY vec_id
-        ), q AS (
-            SELECT p.vec_id AS query_id, e.e AS qe, p.w0 AS q0, p.w1 AS q1
-            FROM packed p JOIN emb e USING (vec_id) WHERE p.vec_id < 10
-        ), c AS (
-            SELECT p.vec_id AS neighbor_id, e.e AS ce, p.w0 AS c0, p.w1 AS c1
-            FROM packed p JOIN emb e USING (vec_id)
-        ), cand AS (
+        {_BINQ_SIDES_DUCK}cand AS (
             SELECT query_id, neighbor_id, qe, ce,
                    bit_count(xor(q0, c0)) + bit_count(xor(q1, c1)) AS hamming,
                    ({" + ".join(
@@ -3617,24 +3011,7 @@ ORACLES = {
     # reproduces the near-band semantics exactly (one Hamming ring wider
     # than the banded tier's exact-agreement oracle)
     "ann_binary_hamming_multiprobe_topk": f"""
-        WITH emb AS MATERIALIZED (
-            SELECT vec_id, embedding::DOUBLE[] AS e
-            FROM embeddings
-            WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-        ), packed AS MATERIALIZED (
-            SELECT vec_id,
-                   bit_or(CASE WHEN i < 32 AND e[i + 1] > 0
-                               THEN (1::BIGINT << i) ELSE 0 END) AS w0,
-                   bit_or(CASE WHEN i >= 32 AND e[i + 1] > 0
-                               THEN (1::BIGINT << (i - 32)) ELSE 0 END) AS w1
-            FROM emb, range(64) r(i) GROUP BY vec_id
-        ), q AS (
-            SELECT p.vec_id AS query_id, e.e AS qe, p.w0 AS q0, p.w1 AS q1
-            FROM packed p JOIN emb e USING (vec_id) WHERE p.vec_id < 10
-        ), c AS (
-            SELECT p.vec_id AS neighbor_id, e.e AS ce, p.w0 AS c0, p.w1 AS c1
-            FROM packed p JOIN emb e USING (vec_id)
-        ), cand AS (
+        {_BINQ_SIDES_DUCK}cand AS (
             SELECT query_id, neighbor_id, qe, ce,
                    bit_count(xor(q0, c0)) + bit_count(xor(q1, c1)) AS hamming,
                    ({" + ".join(
@@ -3853,49 +3230,16 @@ def q_embedding_knn_loo_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     moves; the accuracy fold is |queries|-row. 100 TB: swap the exact
     scan for the banded-Hamming or IVF-PQ shortlist tier — the eval
     harness (rank-1 + label compare + micro accuracy) is unchanged."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select(
-            "vec_id",
-            "label",
-            F.col("embedding").cast("array<double>").alias("e"),
-        )
-        .withColumn("nrm", _norm("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
+    emb = _nonzero_vectors(load(spark, sf, "embeddings"), "label")
+    q, c = _sides(
+        emb, {"label": ("query_label", "neighbor_label"), **_QC}, n_queries=LOO_N_QUERIES
     )
-    q = emb.where(F.col("vec_id") < LOO_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    nn1 = (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") == 1)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            (F.col("query_label") == F.col("neighbor_label"))
-            .cast("int")
-            .alias("correct"),
-        )
+    nn1 = _top_k(_cross(q, c).withColumn("cosine", _cosine()), "cosine", 1).select(
+        "query_id",
+        "query_label",
+        "neighbor_id",
+        "neighbor_label",
+        (F.col("query_label") == F.col("neighbor_label")).cast("int").alias("correct"),
     )
     acc = nn1.agg(
         F.expr(
@@ -3948,18 +3292,6 @@ ORACLES["embedding_knn_loo_accuracy"] = f"""
 CORESET_K = 8
 
 
-def _d2_lit(e_col: str, center: list[float]) -> str:
-    """Squared L2 between array column `e_col` and an inlined center vector
-    as the sequential zip_with fold — the exact Spark twin of DuckDB's
-    list_dot_product over the elementwise diff (the JL-distortion pairing,
-    proven bit-equal by that query's hash checks)."""
-    lit = "array(" + ", ".join(f"{v!r}D" for v in center) + ")"
-    return (
-        f"aggregate(zip_with({e_col}, {lit}, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as double), (acc, x) -> acc + x)"
-    )
-
-
 def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
     """Greedy k-center coreset (Gonzalez 1985 farthest-point traversal,
     the 2-approximation): pick CORESET_K embeddings so every vector is
@@ -4009,7 +3341,7 @@ def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
     # DIM doubles ~ 51 MB at the cap — driver-sized by construction, the
     # same bound that makes the oracle's unrolled CTE chain tractable).
     #
-    # Float discipline (the _codes_kernel construction, proven against
+    # Float discipline (the `_d2_sub` construction, proven against
     # the pure-python mirror in tests/test_r10_reference.py): each d2
     # accumulates elementwise in dim order == the sequential zip_with
     # fold; the running np.minimum over centers == array_min (min of
@@ -4017,21 +3349,13 @@ def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
     # identical IEEE expression; the argmax key (-micro, vec_id) and the
     # first-min assignment (np.argmin keeps the first minimum) reproduce
     # the orderBy/strict-< fold tie rules exactly.
-    import numpy as np
-
-    rows = samp.select("vec_id", "e").collect()
-    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    X = np.array([[float(x) for x in r.e] for r in rows], dtype=np.float64)
+    pdf = samp.select("vec_id", "e").toPandas()  # Arrow: no per-element boxing
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    X = np.stack(pdf["e"].to_numpy()).astype(np.float64, copy=False)
     dim = X.shape[1]
 
-    def d2_to(c: np.ndarray) -> np.ndarray:
-        acc = (X[:, 0] - c[0]) ** 2
-        for i in range(1, dim):
-            acc = acc + (X[:, i] - c[i]) ** 2
-        return acc
-
-    centers = [(first[0].vec_id, np.array([float(x) for x in first[0].e]))]
-    d2_cols = [d2_to(centers[0][1])]
+    centers = [(first[0].vec_id, np.array(first[0].e, dtype=np.float64))]
+    d2_cols = [_d2_sub(X, centers[0][1][None], 0, dim)[:, 0]]
     md2 = d2_cols[0]
     for _ in range(CORESET_K - 1):
         micro = np.floor(md2 * 1000000.0 + 0.5)
@@ -4039,7 +3363,7 @@ def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
         mask = micro == best
         pick = int(np.argmin(np.where(mask, ids, np.iinfo(np.int64).max)))
         centers.append((int(ids[pick]), X[pick].copy()))
-        d2_cols.append(d2_to(centers[-1][1]))
+        d2_cols.append(_d2_sub(X, centers[-1][1][None], 0, dim)[:, 0])
         md2 = np.minimum(md2, d2_cols[-1])
     # assignment: first-min over selection order; radius = max min-d2
     D = np.stack(d2_cols, axis=1)  # n x K, columns in selection order

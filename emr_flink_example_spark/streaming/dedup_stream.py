@@ -273,16 +273,9 @@ class EmbeddingNearDupStreamFilter(_IndexedDedupStreamFilter):
         return repr(("embedding-lsh-index", N_PLANES, PLANES))
 
     def _features(self, batch_df: DataFrame) -> DataFrame:
-        from ..operators.similarity import _norm, _with_bucket
+        from ..operators.similarity import N_PLANES, _nonzero_vectors
 
-        return (
-            _with_bucket(
-                batch_df.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-            )
-            .withColumn("nrm", _norm("e"))
-            .where(F.expr("exists(e, x -> x <> 0.0d)"))
-            .select("vec_id", "bucket", "e", "nrm")
-        )
+        return _nonzero_vectors(batch_df, n_planes=N_PLANES).select("vec_id", "bucket", "e", "nrm")
 
     def _dup_ids(self, feats: DataFrame, index: DataFrame) -> DataFrame:
         cos = F.expr(

@@ -30,6 +30,26 @@ REPRESENTATIVE = [
     "multimodal_decode_mapinpandas",  # Arrow/mapInPandas plumbing
     "split_train_val_test",        # deterministic hash split
     "outlier_filter_quantile",     # broadcast quantile fence
+    # every tier of the shared vector-search pipeline (similarity.py) and
+    # the embedding-dedup queries that reuse its prep stage
+    "ann_lsh_topk",
+    "ann_lsh_multiprobe_topk",
+    "ann_lsh_multitable_topk",
+    "ann_ivf_topk",
+    "embedding_quantize_pq",
+    "ann_pq_adc_topk",
+    "ann_pq_adc_rerank_topk",
+    "ann_ivfpq_topk",
+    "ann_ivfpq_residual_topk",
+    "ann_mmr_topk",
+    "embedding_hard_negatives",
+    "ann_binary_hamming_topk",
+    "ann_binary_hamming_banded_topk",
+    "ann_binary_hamming_multiprobe_topk",
+    "dedup_embedding_cosine",
+    "dedup_semantic_clusters",
+    "embedding_decontamination",
+    "sample_coreset_kcenter",
 ]
 
 

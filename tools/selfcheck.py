@@ -9,11 +9,18 @@ an order-insensitive value comparison. Use while iterating:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# the repo root, wherever this is run from; exported on PYTHONPATH too, so
+# the Python workers that mapInPandas queries start can import the package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from emr_flink_example_spark.session import local_test_session  # noqa: E402
 from emr_flink_example_spark.testing import compare, connect_oracle  # noqa: E402
